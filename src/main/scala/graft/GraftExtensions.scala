@@ -3,7 +3,8 @@ package graft
 import graft.functions._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Session-extensions entry point: makes every graft codegen expression
   * available in any session via configuration alone —
@@ -19,125 +20,121 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("dot_f"),
-      info("dot_f", "dot_f(a, b) - dot product of two array<float> vectors"),
-      (es: Seq[Expression]) => DotProductF(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("l2norm_f"),
-      info("l2norm_f", "l2norm_f(a) - L2 norm of an array<float> vector"),
-      (es: Seq[Expression]) => L2NormF(es.head)))
-    ext.injectFunction((FunctionIdentifier("l2dist2_f"),
-      info("l2dist2_f", "l2dist2_f(a, b) - squared L2 distance of two array<float> vectors"),
-      (es: Seq[Expression]) => L2Dist2F(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("l2dist2_l"),
-      info("l2dist2_l", "l2dist2_l(a, b) - exact squared L2 distance of two array<bigint> vectors"),
-      (es: Seq[Expression]) => L2Dist2L(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("dot_l"),
-      info("dot_l", "dot_l(a, b) - exact dot product of two array<bigint> vectors"),
-      (es: Seq[Expression]) => DotProductL(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("absmax_f"),
-      info("absmax_f", "absmax_f(a) - largest |component| of an array<float> vector"),
-      (es: Seq[Expression]) => AbsMaxF(es.head)))
-    ext.injectFunction((FunctionIdentifier("int8_err_nanos"),
-      info("int8_err_nanos",
-        "int8_err_nanos(a) - total symmetric-int8 round-trip error in integer nanounits"),
-      (es: Seq[Expression]) => Int8ErrNanos(es.head)))
-    ext.injectFunction((FunctionIdentifier("sign_bits_f"),
-      info("sign_bits_f",
-        "sign_bits_f(a) - sign bits of an array<float> vector's first <=64 dims packed into one bigint"),
-      (es: Seq[Expression]) => SignBitsF(es.head)))
-    ext.injectFunction((FunctionIdentifier("bloom_filter_agg"),
-      info("bloom_filter_agg",
-        "bloom_filter_agg(xxhash64(col), est) - Bloom filter over a column's hashes"),
-      ((es: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          es(0), es(1)).toAggregateExpression())))
-    ext.injectFunction((FunctionIdentifier("bloom_might_contain"),
-      info("bloom_might_contain",
-        "bloom_might_contain(bf, xxhash64(col)) - Bloom filter membership probe"),
-      (es: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(shingles) - 32-slot MinHash signature"),
-      (es: Seq[Expression]) => MinHashSig(es.head)))
-    ext.injectFunction((FunctionIdentifier("minhash_bands"),
-      info("minhash_bands", "minhash_bands(shingles) - fused MinHash LSH band hashes"),
-      (es: Seq[Expression]) => MinHashBands(es.head)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(words) - one-pass 64-bit SimHash signature"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(text[, n]) - distinct n-word shingles"),
-      {
-        case Seq(t)    => WordShingles(t)
-        case Seq(t, n) => WordShingles(t, intLit(n))
-      }: Seq[Expression] => Expression))
-    ext.injectFunction((FunctionIdentifier("word_ngrams"),
-      info("word_ngrams", "word_ngrams(text[, n]) - all consecutive n-word grams"),
-      {
-        case Seq(t)    => WordNgrams(t)
-        case Seq(t, n) => WordNgrams(t, intLit(n))
-      }: Seq[Expression] => Expression))
-    ext.injectFunction((FunctionIdentifier("word_segments"),
-      info("word_segments",
-        "word_segments(text[, n]) - non-overlapping n-word segments"),
-      {
-        case Seq(t)    => WordSegments(t)
-        case Seq(t, n) => WordSegments(t, intLit(n))
-      }: Seq[Expression] => Expression))
-    ext.injectFunction((FunctionIdentifier("word_count"),
-      info("word_count",
-        "word_count(text) - size(split(text, ' ')) without building the array"),
-      (es: Seq[Expression]) => WordCount(es.head)))
-    ext.injectFunction((FunctionIdentifier("rolling_fp"),
-      info("rolling_fp", "rolling_fp(text) - Rabin-Karp min-window fingerprint"),
-      (es: Seq[Expression]) => RollingFingerprint(es.head)))
-    ext.injectFunction((FunctionIdentifier("sorted_overlap"),
-      info("sorted_overlap",
-        "sorted_overlap(a, b) - intersection size of two sorted distinct string arrays"),
-      (es: Seq[Expression]) => SortedOverlap(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("sorted_overlap_l"),
-      info("sorted_overlap_l",
-        "sorted_overlap_l(a, b) - intersection size of two sorted distinct bigint arrays"),
-      (es: Seq[Expression]) => SortedOverlapL(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("misra_gries"),
-      info("misra_gries", "misra_gries(col, k) - Misra-Gries heavy-hitter candidate set"),
-      ((es: Seq[Expression]) =>
-        MisraGriesAgg(es(0), intLit(es(1))).toAggregateExpression())))
-    ext.injectFunction((FunctionIdentifier("topk_pair"),
-      info("topk_pair",
-        "topk_pair(value, id, k) - k largest (value, id) pairs, bounded O(k) state"),
-      ((es: Seq[Expression]) =>
-        TopKPairsAgg(es(0), es(1), intLit(es(2))).toAggregateExpression())))
-    ext.injectFunction((FunctionIdentifier("kmv_sketch"),
-      info("kmv_sketch",
-        "kmv_sketch(hash60, k) - k smallest distinct hashes (bottom-k/theta sketch)"),
-      ((es: Seq[Expression]) =>
-        KmvSketchAgg(es(0), intLit(es(1))).toAggregateExpression())))
-    ext.injectFunction((FunctionIdentifier("kll_quantiles"),
-      info("kll_quantiles",
-        "kll_quantiles(col, k, array(ppm...)) - mergeable KLL/MRL quantile sketch"),
-      ((es: Seq[Expression]) =>
-        KllQuantilesAgg(es(0), intLit(es(1)),
-          KllSketch.ppmList(es(2))).toAggregateExpression())))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize", "nfc_normalize(text) - Unicode canonical composition (NFC)"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    ext.injectFunction((FunctionIdentifier("norm_ascii"),
-      info("norm_ascii",
-        "norm_ascii(text) - one-pass lowercase/strip-punct/collapse-ws/trim canonicalization"),
-      (es: Seq[Expression]) => NormAscii(es.head)))
-    ext.injectFunction((FunctionIdentifier("weighted_avg_cents"),
-      info("weighted_avg_cents",
-        "weighted_avg_cents(cents, w) - exact weighted mean in currency units"),
-      (es: Seq[Expression]) => WeightedAvgCents(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("vec_moments"),
-      info("vec_moments",
-        "vec_moments(arr) - one-pass [n, sum_0..d-1, gram_00..d-1d-1] exact moments"),
-      (es: Seq[Expression]) => VecMomentsAgg(es.head).toAggregateExpression()))
+    // Each builder is a pattern over the argument list: a call with an
+    // argument count no case accepts fails analysis with the usage line
+    // instead of reading past the list or silently dropping an argument.
+    def fn(name: String, usage: String)(
+        build: PartialFunction[Seq[Expression], Expression]): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        (es: Seq[Expression]) => build.applyOrElse(es, (_: Seq[Expression]) =>
+          throw new IllegalArgumentException(
+            s"$name: wrong number of arguments (${es.size}); usage: $usage"))))
+
+    fn("dot_f", "dot_f(a, b) - dot product of two array<float> vectors") {
+      case Seq(a, b) => DotProductF(a, b)
+    }
+    fn("l2norm_f", "l2norm_f(a) - L2 norm of an array<float> vector") {
+      case Seq(a) => L2NormF(a)
+    }
+    fn("l2dist2_f", "l2dist2_f(a, b) - squared L2 distance of two array<float> vectors") {
+      case Seq(a, b) => L2Dist2F(a, b)
+    }
+    fn("l2dist2_l",
+      "l2dist2_l(a, b) - exact squared L2 distance of two array<bigint> vectors") {
+      case Seq(a, b) => L2Dist2L(a, b)
+    }
+    fn("dot_l", "dot_l(a, b) - exact dot product of two array<bigint> vectors") {
+      case Seq(a, b) => DotProductL(a, b)
+    }
+    fn("absmax_f", "absmax_f(a) - largest |component| of an array<float> vector") {
+      case Seq(a) => AbsMaxF(a)
+    }
+    fn("int8_err_nanos",
+      "int8_err_nanos(a) - total symmetric-int8 round-trip error in integer nanounits") {
+      case Seq(a) => Int8ErrNanos(a)
+    }
+    fn("sign_bits_f",
+      "sign_bits_f(a) - sign bits of an array<float> vector's first <=64 dims " +
+        "packed into one bigint") {
+      case Seq(a) => SignBitsF(a)
+    }
+    fn("bloom_filter_agg",
+      "bloom_filter_agg(xxhash64(col), est) - Bloom filter over a column's hashes") {
+      case Seq(h, est) => new BloomFilterAggregate(h, est).toAggregateExpression()
+    }
+    fn("bloom_might_contain",
+      "bloom_might_contain(bf, xxhash64(col)) - Bloom filter membership probe") {
+      case Seq(bf, h) => BloomFilterMightContain(bf, h)
+    }
+    fn("minhash_sig", "minhash_sig(shingles) - 32-slot MinHash signature") {
+      case Seq(sh) => MinHashSig(sh)
+    }
+    fn("minhash_bands", "minhash_bands(shingles) - fused MinHash LSH band hashes") {
+      case Seq(sh) => MinHashBands(sh)
+    }
+    fn("simhash64", "simhash64(words) - one-pass 64-bit SimHash signature") {
+      case Seq(ws) => SimHash64(ws)
+    }
+    fn("word_shingles", "word_shingles(text[, n]) - distinct n-word shingles") {
+      case Seq(t)    => WordShingles(t)
+      case Seq(t, n) => WordShingles(t, intLit(n))
+    }
+    fn("word_ngrams", "word_ngrams(text[, n]) - all consecutive n-word grams") {
+      case Seq(t)    => WordNgrams(t)
+      case Seq(t, n) => WordNgrams(t, intLit(n))
+    }
+    fn("word_segments", "word_segments(text[, n]) - non-overlapping n-word segments") {
+      case Seq(t)    => WordSegments(t)
+      case Seq(t, n) => WordSegments(t, intLit(n))
+    }
+    fn("word_count",
+      "word_count(text) - size(split(text, ' ')) without building the array") {
+      case Seq(t) => WordCount(t)
+    }
+    fn("rolling_fp", "rolling_fp(text) - Rabin-Karp min-window fingerprint") {
+      case Seq(t) => RollingFingerprint(t)
+    }
+    fn("sorted_overlap",
+      "sorted_overlap(a, b) - intersection size of two sorted distinct string arrays") {
+      case Seq(a, b) => SortedOverlap(a, b)
+    }
+    fn("sorted_overlap_l",
+      "sorted_overlap_l(a, b) - intersection size of two sorted distinct bigint arrays") {
+      case Seq(a, b) => SortedOverlapL(a, b)
+    }
+    fn("misra_gries", "misra_gries(col, k) - Misra-Gries heavy-hitter candidate set") {
+      case Seq(c, k) => MisraGriesAgg(c, intLit(k)).toAggregateExpression()
+    }
+    fn("topk_pair",
+      "topk_pair(value, id, k) - k largest (value, id) pairs, bounded O(k) state") {
+      case Seq(v, id, k) => TopKPairsAgg(v, id, intLit(k)).toAggregateExpression()
+    }
+    fn("kmv_sketch",
+      "kmv_sketch(hash60, k) - k smallest distinct hashes (bottom-k/theta sketch)") {
+      case Seq(h, k) => KmvSketchAgg(h, intLit(k)).toAggregateExpression()
+    }
+    fn("kll_quantiles",
+      "kll_quantiles(col, k, array(ppm...)) - mergeable KLL/MRL quantile sketch") {
+      case Seq(c, k, ppm) =>
+        KllQuantilesAgg(c, intLit(k), KllSketch.ppmList(ppm)).toAggregateExpression()
+    }
+    fn("nfc_normalize", "nfc_normalize(text) - Unicode canonical composition (NFC)") {
+      case Seq(t) => NfcNormalize(t)
+    }
+    fn("norm_ascii",
+      "norm_ascii(text) - one-pass lowercase/strip-punct/collapse-ws/trim canonicalization") {
+      case Seq(t) => NormAscii(t)
+    }
+    fn("weighted_avg_cents",
+      "weighted_avg_cents(cents, w) - exact weighted mean in currency units") {
+      case Seq(c, w) => WeightedAvgCents(c, w)
+    }
+    fn("vec_moments",
+      "vec_moments(arr) - one-pass [n, sum_0..d-1, gram_00..d-1d-1] exact moments") {
+      case Seq(a) => VecMomentsAgg(a).toAggregateExpression()
+    }
   }
 
   private def intLit(e: Expression): Int = e.eval(null) match {

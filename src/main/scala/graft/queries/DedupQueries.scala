@@ -704,15 +704,14 @@ object DedupQueries {
     * including sub-3-word docs that never enter the shingle pipeline. */
   private val q122: Q = (s, d) => {
     // Round 16 checkpointed the fingerprint and shingled frames (the
-    // un-checkpointed plan re-kerneled the documents table per consumer —
-    // WorkProbe: 7 documents scans). Round 17 REVERTED both: with the
-    // substring shingle kernel the recompute became cheaper than
-    // materializing + re-reading the blocks (interleaved sf1 A/B, 3
-    // pairs: checkpointed mins 1.92-5.79 s vs un-checkpointed 1.80-2.80,
-    // un-checkpointed min wins; sf0.1 was flat in round 16 already). The
-    // final eager checkpoint of the small verdict frame stays (it cuts
-    // the multi-join lineage the bench action would otherwise re-analyze).
-    val tracker = new graft.operators.CheckpointTracker(Tables.documents(s, d))
+    // un-checkpointed plan re-kerneled the documents table per consumer:
+    // 7 documents scans). Round 17 reverted both: with the substring
+    // shingle kernel the recompute became cheaper than materializing +
+    // re-reading the blocks (interleaved sf1 A/B, 3 pairs: checkpointed
+    // mins 1.92-5.79 s vs un-checkpointed 1.80-2.80, un-checkpointed min
+    // wins; sf0.1 was flat in round 16 already). No intermediate frame is
+    // checkpointed; only the small verdict frame is, eagerly (it cuts the
+    // multi-join lineage the bench action would otherwise re-analyze).
     val docs = Tables.documents(s, d)
       .withColumn("is_new", (col("doc_id") % 10 === 0).cast("boolean"))
     // exact layer: lowest old doc sharing the text fingerprint
@@ -758,7 +757,7 @@ object DedupQueries {
       .filter(col("n_inter").cast("double") / col("n_union") >= 0.5)
       .groupBy(col("new_id"))
       .agg(count(lit(1)).as("n_near"), min(col("old_id")).as("near_id"))
-    val out = docs.filter(col("is_new")).select(col("doc_id"))
+    docs.filter(col("is_new")).select(col("doc_id"))
       .join(exact, Seq("doc_id"), "left")
       .join(near.withColumnRenamed("new_id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -768,11 +767,8 @@ object DedupQueries {
         coalesce(col("exact_id"), col("near_id"), lit(-1L)).as("match_id"),
         coalesce(col("n_near"), lit(0L)).as("n_near_partners"))
       .orderBy(col("doc_id"))
-      // One eager action runs the pipeline while the lazy blocks are
-      // alive; the per-new-doc verdict outlives them.
+      // one eager action runs the whole pipeline
       .localCheckpoint(true)
-    tracker.releaseAll()
-    out
   }
 
   /** DuckDB replay: the q66 pair CTE gives ALL verified J>=0.5 pairs; the

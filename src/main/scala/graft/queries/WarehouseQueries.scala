@@ -601,10 +601,6 @@ object WarehouseQueries {
     * each a map-side lookup against the broadcast top-20). */
   private val q201: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    // DUPLICATION PIN: graft.Q201Decompose restates these stages verbatim
-    // (with per-stage eager materialization) to time them in isolation.
-    // Any shape change here must be ported there or the decomposition
-    // measures a different pipeline.
     val tracker = new graft.operators.CheckpointTracker(Tables.lineitem(s, d))
     // Packed keys: Q201_DECOMP_r14 splits the isolated sf1 wall into
     // baskets 3.1 / pairs 2.3 / triples 2.7 / quantile 1.6 / witness

@@ -1,20 +1,26 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ⇄ catalyst Expression bridge.
+/** Access to the few Spark internals the repo needs, in one file.
   *
   * Spark 4 made `Column` transport-agnostic (it wraps a `ColumnNode`, not an
   * `Expression`), and the classic-mode converter `ExpressionUtils` is
   * `private[sql]`. Custom codegen expressions that take non-Expression
   * constructor parameters (e.g. a primitive plane matrix) cannot go through
   * the function registry's `Seq[Expression] => Expression` builders, so this
-  * one-file package bridge re-exports the two converters. Nothing else in
-  * the repo lives under the spark package tree.
+  * one-file package bridge re-exports the two converters, plus the listener
+  * bus drain (`private[spark]`) that `graft.ExecPlan` waits on before it
+  * reads its listeners. Nothing else in the repo lives under the spark
+  * package tree.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until every listener event posted so far has been delivered. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

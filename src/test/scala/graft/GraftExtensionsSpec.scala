@@ -42,6 +42,36 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("a wrong argument count fails analysis, naming the function") {
+    // Each call here once slipped through: a missing argument read past the
+    // list (word_count() threw a bare NoSuchElementException, dot_f(a) an
+    // IndexOutOfBoundsException) and an extra one was silently dropped
+    // (word_count(text, 7) counted words as if the 7 were absent).
+    val base = TestSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try {
+      Seq(
+        "word_count()" -> "word_count",
+        "word_count('a b', 7)" -> "word_count",
+        "dot_f(array(CAST(1 AS FLOAT)))" -> "dot_f",
+        "l2norm_f(array(CAST(1 AS FLOAT)), array(CAST(1 AS FLOAT)))" -> "l2norm_f",
+        "word_shingles('a b c', 2, 3)" -> "word_shingles",
+        "topk_pair(1.0D, 1L)" -> "topk_pair"
+      ).foreach { case (call, name) =>
+        val e = intercept[IllegalArgumentException](s.sql(s"SELECT $call").collect())
+        assert(e.getMessage.startsWith(s"$name: wrong number of arguments"), call)
+      }
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   test("extensions cover every name the per-object registrars add (mechanical parity)") {
     // Names the ad-hoc path registers: run every registrar against a FRESH
     // session (the shared one may already carry graft names from earlier
