@@ -530,7 +530,7 @@ object TextQueries {
       .agg(count(lit(1)).as("dl"),
         terms.map(t => sum(when(col("w") === t, 1L).otherwise(0L)).as(s"tf_$t")): _*))
     val consts = docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(perDoc.agg(sum(col("dl")).as("s_tok")))
+      .crossJoin(perDoc.agg(coalesce(sum(col("dl")), lit(0L)).as("s_tok")))
       .select(col("n_docs"), expr("s_tok * 1000 div n_docs").as("a"))
     val tf = perDoc.select(col("doc_id"), col("dl"),
         expr("stack(3, 'spark', tf_spark, 'window', tf_window, 'merge', tf_merge)")

@@ -29,16 +29,23 @@ final case class KinesisShardInfo(shardId: String, parents: Seq[String],
 }
 
 /** One GetRecords response page. `millisBehindLatest` is the service's
-  * own tip-distance report: a real Kinesis stream may legally return an
-  * EMPTY page while records remain (`MillisBehindLatest > 0`), so
-  * "empty page" alone never means caught-up — callers must check the
-  * field (None on servers that omit it, treated as caught-up-when-empty,
-  * which is the loopback/test behavior). */
+  * own tip-distance report, and it alone decides whether the iterator
+  * reached the tip: a real Kinesis stream may legally return an EMPTY
+  * page while records remain (`MillisBehindLatest > 0`), and a page that
+  * carries records may already be AT the tip (`MillisBehindLatest: 0`).
+  * Servers that omit the field (None) fall back to "empty page means
+  * caught up", which is the loopback/test behavior. */
 final case class KinesisPage(records: Seq[KinesisRecord],
     nextIterator: Option[String], millisBehindLatest: Option[Long]) {
-  /** True when this page proves the iterator reached the tip: nothing
-    * returned AND the service does not report distance-behind. */
-  def caughtUp: Boolean = records.isEmpty && millisBehindLatest.forall(_ <= 0L)
+  /** True when this page proves the iterator reached the tip as of this
+    * read: the service reports no distance behind (`Some(b)`, b <= 0),
+    * whether or not the page carried records; without a report, only an
+    * empty page does. Records appended after the read belong to the next
+    * read. */
+  def caughtUp: Boolean = millisBehindLatest match {
+    case Some(behind) => behind <= 0L
+    case None => records.isEmpty
+  }
 }
 
 /** Minimal client for the REAL Kinesis wire protocol — JSON over HTTP
@@ -53,8 +60,9 @@ final case class KinesisPage(records: Seq[KinesisRecord],
   * multi-shard drains, empty polls).
   *
   * Ops implemented (the consume path the reference exercises):
-  * ListShards, GetShardIterator (TRIM_HORIZON / AT_SEQUENCE_NUMBER),
-  * GetRecords with Limit + NextShardIterator pagination.
+  * ListShards, GetShardIterator (TRIM_HORIZON / AT_SEQUENCE_NUMBER /
+  * AFTER_SEQUENCE_NUMBER), GetRecords with Limit + NextShardIterator
+  * pagination.
   *
   * Scale posture: this client is the LAMBDA-EQUIVALENT poll unit — a
   * bounded driver-side drain per trigger, exactly the reference's
@@ -193,9 +201,8 @@ final case class KinesisHttpClient(endpoint: String, timeoutMillis: Int = 12000,
         val page = getRecordsPage(it.get, limitPerPoll)
         out ++= page.records
           .map(r => if (r.shardId.isEmpty) r.copy(shardId = shard) else r)
-        // caught up = empty page AND the service reports no distance
-        // behind the tip (a real stream may return empty pages with
-        // MillisBehindLatest > 0 while records remain)
+        // stop at the page that reports the tip (MillisBehindLatest 0,
+        // records or not); an empty page still behind it keeps polling
         drained = page.caughtUp
         it = page.nextIterator
         polls += 1

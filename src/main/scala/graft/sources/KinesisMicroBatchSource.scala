@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,7 +35,8 @@ import scala.jdk.CollectionConverters._
   *    Spark job (one task per shard, ≤ maxPollsPerShard pages of ≤
   *    limitPerPoll records each — the Lambda poll bound, so ReadLimit
   *    stays allAvailable); each task returns only its shard's last
-  *    sequence number, a few dozen bytes. Record PAYLOADS are likewise
+  *    sequence number, poll count and tip distance ([[ShardProbe]]), a
+  *    few dozen bytes. Record PAYLOADS are likewise
   *    fetched on EXECUTORS, one `InputPartition` per shard, each opening
   *    its own HTTP client and resuming with `AT_SEQUENCE_NUMBER`/
   *    `AFTER_SEQUENCE_NUMBER` iterators. Shards are the parallelism
@@ -49,14 +50,20 @@ import scala.jdk.CollectionConverters._
   *    still read once on the executors and discarded; production
   *    connectors amortize that with prefetch caches, which changes
   *    cost, not semantics.)
+  *  - **The probe stops at the page that reports the tip.** A page with
+  *    `MillisBehindLatest: 0` proves the iterator reached the tip as of
+  *    that read, records or not ([[KinesisPage.caughtUp]]), so the probe
+  *    ends there and reports that page's last sequence number; records
+  *    appended later belong to the next trigger. Under a live producer
+  *    a new record lands during every poll, so stopping only on an EMPTY
+  *    page would chase the tip for the whole poll budget.
   *  - **Empty pages are not end-of-data.** Against real AWS Kinesis,
   *    GetRecords may legally return an empty page while records remain
-  *    (`MillisBehindLatest > 0`). Both the probe and the reader treat
-  *    "caught up" as empty page AND no reported distance behind the tip
-  *    ([[KinesisPage.caughtUp]]); the reader polls un-budgeted — the
-  *    (startSeq, endSeq] range already bounds the read — and fails
-  *    loudly only when the shard is genuinely closed or at-tip before
-  *    the checkpointed end.
+  *    (`MillisBehindLatest > 0`); both the probe and the reader keep
+  *    polling through it. The reader consults [[KinesisPage.caughtUp]]
+  *    only on empty pages, polls un-budgeted — the (startSeq, endSeq]
+  *    range already bounds the read — and fails loudly only when the
+  *    shard is genuinely closed or at-tip before the checkpointed end.
   *  - **Replay is deterministic**: sequence numbers are monotone within a
   *    shard, so `planInputPartitions(start, end]` names an immutable
   *    record range; re-running a batch after a crash re-reads exactly the
@@ -106,17 +113,20 @@ object KinesisMicroBatchSource {
   /** One shard's tip probe — runs INSIDE a Spark task (one per shard):
     * pages GetRecords from the start position, retaining only the last
     * sequence number seen. Page bodies are read and discarded here, on
-    * the executor; the task's result is just `(Option[seqNumber],
-    * drained)` — `drained` is true exactly when the service returned a
-    * null NextShardIterator, the wire signal that a CLOSED shard has
-    * been read to its EndingSequenceNumber (the parent-done fact the
-    * reshard lineage gate needs). Caught-up detection is
-    * MillisBehindLatest-aware: an empty page with reported distance
-    * behind the tip keeps polling (within the poll budget) instead of
-    * under-advancing the offset. */
+    * the executor; the task's result is a [[ShardProbe]] of a few dozen
+    * bytes. The probe stops at the first page that reports the tip
+    * ([[KinesisPage.caughtUp]]: `MillisBehindLatest` 0, records or not)
+    * and reports that page's last sequence number; an empty page with
+    * reported distance behind the tip keeps polling (within the poll
+    * budget) instead of under-advancing the offset. `drained` is true
+    * exactly when the service returned a null NextShardIterator, the
+    * wire signal that a CLOSED shard has been read to its
+    * EndingSequenceNumber (the parent-done fact the reshard lineage gate
+    * needs; a probe that stops on an at-tip page before that signal is
+    * matched against the listing's EndingSequenceNumber instead). */
   private[sources] def probeShardTip(opts: Map[String, String],
       streamName: String, shard: String, start: Option[String],
-      limitPerPoll: Int, maxPollsPerShard: Int): (Option[String], Boolean) = {
+      limitPerPoll: Int, maxPollsPerShard: Int): ShardProbe = {
     val c = clientFor(opts)
     var pos = start
     var it: Option[String] = Some(start match {
@@ -126,16 +136,26 @@ object KinesisMicroBatchSource {
     })
     var polls = 0
     var caughtUp = false
+    var behind: Option[Long] = None
     while (it.isDefined && polls < maxPollsPerShard && !caughtUp) {
       val page = c.getRecordsPage(it.get, limitPerPoll)
       page.records.lastOption.foreach(r => pos = Some(r.sequenceNumber))
       caughtUp = page.caughtUp
+      behind = page.millisBehindLatest
       it = page.nextIterator
       polls += 1
     }
-    (pos, it.isEmpty)
+    ShardProbe(pos, it.isEmpty, polls, behind)
   }
 }
+
+/** One shard's tip-probe result, returned by the probe task: the last
+  * sequence number seen (the start position when no record followed it;
+  * None for a shard that never carried one), whether the wire reported the shard closed and drained (null
+  * NextShardIterator), the GetRecords pages it took, and the last page's
+  * `MillisBehindLatest` (None when the service omits it). */
+final case class ShardProbe(tip: Option[String], drained: Boolean,
+    polls: Int, millisBehindLatest: Option[Long])
 
 /** One shard's checkpointed position: the last processed sequence number
   * (None before the first record) plus the DONE fact — the shard is
@@ -210,12 +230,19 @@ object KinesisOffset {
   }
 }
 
+/** The micro-batch stream. As [[ReportsSourceMetrics]] it reports, per
+  * shard probed by the latest `latestOffset`, that probe's GetRecords
+  * pages (`probePolls.<shardId>`) and its last page's MillisBehindLatest
+  * (`millisBehindLatest.<shardId>`, absent when the service omits it);
+  * they appear in `StreamingQueryProgress.sources(i).metrics`. */
 final class KinesisMicroBatchStream(options: Map[String, String])
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
   private val streamName = options("streamname")
   private val limitPerPoll = options.getOrElse("limitperpoll", "500").toInt
   private val maxPollsPerShard = options.getOrElse("maxpollspershard", "100").toInt
   @transient private lazy val client = KinesisMicroBatchSource.clientFor(options)
+  /** The latest trigger's probe results, by shard. */
+  @volatile private var lastProbes: Map[String, ShardProbe] = Map.empty
 
   override def initialOffset(): Offset = KinesisOffset(Map.empty)
 
@@ -225,8 +252,11 @@ final class KinesisMicroBatchStream(options: Map[String, String])
     * start position (the previous batch's end — on restart, straight from
     * the checkpoint): <= maxPollsPerShard GetRecords pages per shard per
     * trigger (the Lambda poll bound — admission control in the
-    * reference's own unit, so ReadLimit stays allAvailable), stopping
-    * early on an empty page (caught up). Only sequence NUMBERS are
+    * reference's own unit, so ReadLimit stays allAvailable), stopping at
+    * the first page that reports the tip (`MillisBehindLatest` 0, or an
+    * empty page from a server that omits the field). Under a live
+    * producer that is one or two pages per shard; what arrives after the
+    * read waits for the next trigger. Only sequence NUMBERS are
     * retained; payloads are fetched on executors. Implementing
     * SupportsAdmissionControl is what makes the resume explicit: the
     * engine hands this method the checkpointed start, so a restarted
@@ -262,6 +292,7 @@ final class KinesisMicroBatchStream(options: Map[String, String])
     * already-done shards are never probed again (their markers are
     * carried forward verbatim, zero wire calls). */
   private def reportLatest(start: Map[String, String]): Offset = {
+    lastProbes = Map.empty
     val shards = client.listShards(streamName)
     if (shards.isEmpty) return KinesisOffset(Map.empty)
     val startPos = start.view.mapValues(ShardPos.parse).toMap
@@ -283,22 +314,31 @@ final class KinesisMicroBatchStream(options: Map[String, String])
     val closedEnd = admissible.map(sh => sh.shardId -> sh.endingSequenceNumber).toMap
     val work = admissible.map(sh =>
       (sh.shardId, startPos.get(sh.shardId).flatMap(_.seq)))
-    val tips = spark.sparkContext
+    val probes = spark.sparkContext
       .parallelize(work, work.size)
       .map { case (sh, st) =>
         sh -> KinesisMicroBatchSource.probeShardTip(opts, sn, sh, st, lpp, mpps)
       }
       .collect()
-    val probed = tips.flatMap { case (sh, (tip, drainedWire)) =>
+      .toMap
+    lastProbes = probes
+    val probed = probes.flatMap { case (sh, pr) =>
       // done = the wire said closed-and-drained (null NextShardIterator),
       // or the probe reached the listing's EndingSequenceNumber exactly
-      val drained = drainedWire ||
-        (closedEnd(sh).isDefined && tip == closedEnd(sh))
-      if (tip.isEmpty && !drained) None // untouched empty open shard
-      else Some(sh -> ShardPos(tip, drained).render)
-    }.toMap
+      // (it stops on an at-tip page that may still carry an iterator)
+      val drained = pr.drained ||
+        (closedEnd(sh).isDefined && pr.tip == closedEnd(sh))
+      if (pr.tip.isEmpty && !drained) None // untouched empty open shard
+      else Some(sh -> ShardPos(pr.tip, drained).render)
+    }
     KinesisOffset(carried ++ probed)
   }
+
+  override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] =
+    lastProbes.toSeq.flatMap { case (sh, pr) =>
+      (s"probePolls.$sh" -> pr.polls.toString) +:
+        pr.millisBehindLatest.map(b => s"millisBehindLatest.$sh" -> b.toString).toSeq
+    }.toMap.asJava
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = positionsOf(start).view.mapValues(ShardPos.parse).toMap

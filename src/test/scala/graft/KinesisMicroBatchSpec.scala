@@ -26,6 +26,10 @@ import scala.jdk.CollectionConverters._
   *    log) and delivers only post-checkpoint records;
   *  - per-trigger admission is bounded by limitPerPoll × maxPollsPerShard
   *    (the Lambda poll unit, lambda_function.py:140-141);
+  *  - under a producer that appends during every poll, the tip probe
+  *    stops at the page that reports the tip (≤ 2 GetRecords per shard
+  *    per trigger, also visible in the source metrics) instead of
+  *    chasing the tip for the whole poll budget;
   *  - end-to-end: `StreamingFanOut.startKinesis` drives the wire source
   *    through the dead-letter fan-out into both sinks, and a simulated
   *    crash-before-commit (newest commit-log entry removed) redelivers
@@ -51,6 +55,16 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     * real-Kinesis transient that must not stall tip discovery or fail
     * the reader. */
   private val hiccups = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** When > 0, each GetRecords page that reaches the tip spends one unit
+    * to append one new record to its shard AFTER the page is computed — a
+    * live producer that always outruns the reader by one record, so
+    * every probe page is non-empty and reports `MillisBehindLatest: 0`. */
+  private val trickle = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** GetRecords pages per iterator chain (one chain per GetShardIterator,
+    * carried through NextShardIterator) — the length of each probe or
+    * read, as seen on the wire. */
+  private val chainPages = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+  private val chains = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private var server: HttpServer = _
   private def endpoint: String = s"http://127.0.0.1:${server.getAddress.getPort}/"
@@ -96,27 +110,33 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
               case other => -1
             }
             if (pos < 0) reply(400, s"""{"__type":"InvalidArgumentException","t":"$typ"}""")
-            else reply(200, s"""{"ShardIterator":"it|$shard|$pos"}""")
+            else reply(200, s"""{"ShardIterator":"it|$shard|$pos|${chains.incrementAndGet()}"}""")
           }
         case "Kinesis_20131202.GetRecords" =>
           getRecordsOrigins.add(
             Option(ex.getRequestHeaders.getFirst("X-Graft-Origin"))
               .getOrElse("unknown"))
-          val Array(_, shard, posS) = body.path("ShardIterator").asText().split('|')
+          val Array(_, shard, posS, chain) = body.path("ShardIterator").asText().split('|')
           val limit = body.path("Limit").asInt(500)
           val pos = posS.toInt
+          chainPages.merge(chain.toInt, 1, _ + _)
           if (hiccups.getAndUpdate(n => math.max(0, n - 1)) > 0) {
             // transient empty page: same-position iterator, still behind
-            reply(200, s"""{"Records":[],"NextShardIterator":"it|$shard|$pos","MillisBehindLatest":5000}""")
+            reply(200, s"""{"Records":[],"NextShardIterator":"it|$shard|$pos|$chain","MillisBehindLatest":5000}""")
           } else {
             val (recs, behind) = store(shard).synchronized {
               val r = store(shard).slice(pos, pos + limit).toIndexedSeq
-              (r, math.max(0, store(shard).size - (pos + r.size)) * 1000L)
+              val b = math.max(0, store(shard).size - (pos + r.size)) * 1000L
+              if (b == 0) {
+                val left = trickle.getAndUpdate(n => math.max(0, n - 1))
+                if (left > 0) store(shard) += b64(recJson(1000 + left))
+              }
+              (r, b)
             }
             val items = recs.zipWithIndex.map { case (d, i) =>
               s"""{"ShardId":"$shard","PartitionKey":"pk-${pos + i}","SequenceNumber":"${pos + i}","Data":"$d"}"""
             }.mkString(",")
-            reply(200, s"""{"Records":[$items],"NextShardIterator":"it|$shard|${pos + recs.size}","MillisBehindLatest":$behind}""")
+            reply(200, s"""{"Records":[$items],"NextShardIterator":"it|$shard|${pos + recs.size}|$chain","MillisBehindLatest":$behind}""")
           }
         case other => reply(400, s"""{"__type":"UnknownOperationException","target":"$other"}""")
       }
@@ -261,6 +281,65 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"shard1 history complete and unique, got $s1")
     val all = buf.asScala.toSeq.map(t => (t._2, t._3))
     assert(all.distinct.size == all.size, "no duplicates under hiccups")
+  }
+
+  test("a probe under a producer that appends on every poll stops at the tip, not the poll budget") {
+    val buf = new ConcurrentLinkedQueue[(Long, String, String)]()
+    push(shard0, b64(recJson(60)))
+    push(shard1, b64(recJson(61)))
+    chainPages.clear()
+    // more appends than the poll budget of both shards: a probe that only
+    // stops on an EMPTY page would use all maxPollsPerShard pages
+    trickle.set(24)
+    val q = graft.sources.KinesisMicroBatchSource
+      .readStream(spark, endpoint, "audit-stream", maxPollsPerShard = 10)
+      .writeStream
+      .option("checkpointLocation", tmp("kinesis_ckpt_trickle"))
+      .foreachBatch(collectTo(buf) _)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val leftOver = trickle.getAndSet(0)
+    assert(leftOver == 0, s"the run must consume the whole trickle, $leftOver left")
+
+    // on the wire: every chain (a probe or a read, one GetShardIterator
+    // each) takes at most 2 GetRecords pages
+    val pages = chainPages.asScala.values.toSeq
+    assert(pages.nonEmpty && pages.max <= 2,
+      s"a probe or read chased the tip: pages per chain ${pages.sorted.reverse.take(8)}")
+    // in the source metrics: each trigger's probe, per shard
+    val probePolls = q.recentProgress.toSeq.flatMap(_.sources.head.metrics.asScala)
+      .collect { case (k, v) if k.startsWith("probePolls.") => v.toInt }
+    assert(probePolls.nonEmpty && probePolls.max <= 2,
+      s"per-shard probe polls per trigger: $probePolls")
+    val lastMetrics = q.lastProgress.sources(0).metrics.asScala
+    assert(Seq(shard0, shard1).forall(sh =>
+      lastMetrics.get(s"probePolls.$sh").exists(_.toInt <= 2) &&
+        lastMetrics.get(s"millisBehindLatest.$sh").contains("0")),
+      s"last trigger's source metrics: $lastMetrics")
+
+    // once the trickle ends, every record of the fresh-checkpoint run
+    // (the full shard history) arrives exactly once
+    Seq(shard0, shard1).foreach { sh =>
+      val seqs = buf.asScala.toSeq.filter(_._2 == sh).map(_._3.toInt).sorted
+      assert(seqs == (0 until store(sh).size).toList,
+        s"$sh history complete and unique, got $seqs")
+    }
+  }
+
+  test("caughtUp: MillisBehindLatest decides when reported; otherwise only an empty page") {
+    import graft.sources.{KinesisPage, KinesisRecord}
+    val one = Seq(KinesisRecord(shard0, "pk-0", "0", "e30="))
+    val cases = Seq(
+      (Seq.empty[KinesisRecord], None, true),
+      (Seq.empty[KinesisRecord], Some(0L), true),
+      (Seq.empty[KinesisRecord], Some(5000L), false),
+      (one, None, false),
+      (one, Some(0L), true),
+      (one, Some(5000L), false))
+    cases.foreach { case (recs, behind, expected) =>
+      assert(KinesisPage(recs, Some("it"), behind).caughtUp == expected,
+        s"records=${recs.size} millisBehindLatest=$behind")
+    }
   }
 
   test("end-to-end: wire source through both sinks; crash-before-commit redelivers idempotently") {

@@ -223,6 +223,69 @@ class KinesisReshardingSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("closed parent read to its end on an at-tip page that still carries an iterator is done") {
+    import graft.sources.KinesisMicroBatchStream
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    spark
+    // A service that hands back a NextShardIterator on the page carrying a
+    // closed shard's last record (MillisBehindLatest 0) and signals the
+    // closed end (null iterator) only on the read past it. The probe stops
+    // on the at-tip page, so the done marker must come from the listing's
+    // EndingSequenceNumber, not from the null iterator.
+    val p = "shardId-000000000040"
+    val c = "shardId-000000000041"
+    val data = Map(p -> recs(0 until 3), c -> recs(0 until 2))
+    val reads = new ConcurrentLinkedQueue[String]()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      val body = mapper.readTree(graft.streaming.HttpTransports.readAll(ex.getRequestBody))
+      val json = ex.getRequestHeaders.getFirst("X-Amz-Target") match {
+        case "Kinesis_20131202.ListShards" =>
+          s"""{"Shards":[{"ShardId":"$p","SequenceNumberRange":{"StartingSequenceNumber":"0","EndingSequenceNumber":"2"}},""" +
+            s"""{"ShardId":"$c","ParentShardId":"$p","SequenceNumberRange":{"StartingSequenceNumber":"0"}}]}"""
+        case "Kinesis_20131202.GetShardIterator" =>
+          val from = body.path("ShardIteratorType").asText() match {
+            case "AFTER_SEQUENCE_NUMBER" => body.path("StartingSequenceNumber").asText().toInt + 1
+            case _ => 0
+          }
+          s"""{"ShardIterator":"${body.path("ShardId").asText()}|$from"}"""
+        case "Kinesis_20131202.GetRecords" =>
+          val Array(shard, posS) = body.path("ShardIterator").asText().split('|')
+          val pos = posS.toInt
+          reads.add(shard)
+          val page = data(shard).drop(pos)
+          val items = page.indices.map(i =>
+            s"""{"PartitionKey":"pk","SequenceNumber":"${pos + i}","Data":"${page(i)}"}""")
+          val next =
+            if (shard == p && page.isEmpty) "null" else s""""$shard|${pos + page.size}""""
+          s"""{"Records":[${items.mkString(",")}],"NextShardIterator":$next,"MillisBehindLatest":0}"""
+      }
+      val bytes = json.getBytes("UTF-8")
+      ex.sendResponseHeaders(200, bytes.length)
+      ex.getResponseBody.write(bytes); ex.close()
+    })
+    server.start()
+    try {
+      val stream = new KinesisMicroBatchStream(Map(
+        "endpoint" -> s"http://127.0.0.1:${server.getAddress.getPort}/",
+        "streamname" -> "reshard-at-tip"))
+      val end0 = stream.latestOffset(KinesisOffset(Map.empty), ReadLimit.allAvailable())
+        .asInstanceOf[KinesisOffset]
+      assert(end0.positions == Map(p -> "2|done"),
+        s"the parent's at-tip end must carry the done marker: ${end0.positions}")
+      assert(reads.asScala.toSeq == Seq(p),
+        s"one GetRecords page settles the parent: ${reads.asScala.toSeq}")
+      assert(stream.metrics(java.util.Optional.of(end0)).asScala ==
+        Map(s"probePolls.$p" -> "1", s"millisBehindLatest.$p" -> "0"))
+      val end1 = stream.latestOffset(end0, ReadLimit.allAvailable())
+        .asInstanceOf[KinesisOffset]
+      assert(end1.positions == Map(p -> "2|done", c -> "1"),
+        s"the next trigger admits the child: ${end1.positions}")
+    } finally server.stop(0)
+  }
+
   test("ShardPos grammar and offset JSON stay backward-compatible") {
     assert(ShardPos.parse("17") == ShardPos(Some("17"), done = false))
     assert(ShardPos.parse("17|done") == ShardPos(Some("17"), done = true))
