@@ -42,24 +42,23 @@ object Sinks {
     *
     * - daily routing: `_index = prefix + date(datetime)` → `partitionBy` on
     *   `index_date` (the file analogue of per-day indices)
-    * - idempotency: `_id = random_id`; within a batch, duplicates collapse
-    *   via dropDuplicates on the key (ES would upsert the same doc). Across
-    *   redelivered batches the same `_id` lands in the same daily partition,
-    *   so a reader dedups by `_id` — see [[readEsIndex]] — which is exactly
-    *   "at-least-once delivery made idempotent by the key".
+    * - idempotency: `_id = random_id`, one bulk action per record as in
+    *   the reference (lambda_function.py:81,84): an `_id` repeated in a
+    *   batch or redelivered later is written again (OpenSearch updates the
+    *   doc), and [[readEsIndex]] keeps one document per `_id` — "at-least-
+    *   once delivery made idempotent by the key". With no in-batch dedup
+    *   the write is one narrow stage, no exchange; the counters count
+    *   actions, duplicates included (the reference's `success of total`).
     * - errors: bulk failures are logged, not raised (raise_on_error=False):
     *   the write is wrapped, failure returns 0 delivered.
     */
   def writeEs(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
       authMode: AuthMode = AuthMode.SigV4): Long = {
     writeTransportMeta(dir, authMode)
-    val keyed = AuditPipeline.withRoutingKeys(AuditPipeline.skipNulls(pruned), prefix)
-      .dropDuplicates("_id")
-      .withColumn("index_date", to_date(col("datetime")).cast("string"))
     // Observation rides along the write job — no separate count() pass over
     // the batch (at 100 TB a second full pass per micro-batch is real money).
     val obs = org.apache.spark.sql.Observation()
-    val observed = keyed.observe(obs, count(lit(1)).as("n"))
+    val observed = esActions(pruned, prefix).observe(obs, count(lit(1)).as("n"))
     try {
       observed.write.mode("append").partitionBy("index_date").parquet(dir)
       val rows = obs.get("n").asInstanceOf[Long]
@@ -72,6 +71,12 @@ object Sinks {
         0L
     }
   }
+
+  /** Both ES writers' bulk actions: one per record with a `random_id`,
+    * keyed and routed to its `index_date` partition. */
+  private def esActions(pruned: DataFrame, prefix: String): DataFrame =
+    AuditPipeline.withRoutingKeys(AuditPipeline.skipNulls(pruned), prefix)
+      .withColumn("index_date", to_date(col("datetime")).cast("string"))
 
   /** Record the transport configuration a real client would be built with
     * (lambda_function.py:61-74: auth mode + port 443 TLS + gzip + cert
@@ -92,10 +97,11 @@ object Sinks {
     new String(Files.readAllBytes(Paths.get(dir, "_transport.json")),
       StandardCharsets.UTF_8)
 
-  /** Read the simulated index with upsert semantics: last write per `_id`
-    * wins (the state an OpenSearch reader would observe). The `_transport`
-    * marker is invisible here — `_`-prefixed files are metadata by Hadoop
-    * convention and the parquet reader skips them. */
+  /** Read the simulated index as an OpenSearch reader observes it: one
+    * document per `_id`, however often it was sent. Which copy is kept is
+    * unspecified; a redelivery resends the same record, so copies agree.
+    * The `_transport` marker is invisible here — `_`-prefixed files are
+    * metadata by Hadoop convention and the parquet reader skips them. */
   def readEsIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).dropDuplicates("_id")
 
@@ -107,7 +113,7 @@ object Sinks {
     * Parquet partitioned by batch tag with DYNAMIC partition overwrite, so
     * a foreachBatch retry of the same epoch replaces its own partition
     * instead of appending duplicate quarantine rows — the same
-    * replay-idempotence the ES sink gets from `_id` dedup and the Splunk
+    * replay-idempotence the ES sink gets from its `_id` and the Splunk
     * sink from its deterministic chunk tag. (With an ad-hoc random tag —
     * batchId < 0 — each call still lands in a fresh partition, i.e. plain
     * append.)
@@ -193,7 +199,7 @@ object Sinks {
     *   never raised (`raise_on_error=False`), and excluded from the index
     *   write; everything else is delivered;
     * - counters report success/total exactly as the reference's
-    *   `print(f"{success} of {total}")`.
+    *   `print(f"{success} of {total}")`, over the same actions as [[writeEs]].
     *
     * The delivery decision runs per-partition on executors (the sink
     * boundary — same shape as a real HTTP bulk client in foreachPartition);
@@ -201,9 +207,7 @@ object Sinks {
     */
   def writeEsBulk(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
       transport: BulkTransport, maxRetries: Int = 3, chunkSize: Int = 500): Long = {
-    val keyed = AuditPipeline.withRoutingKeys(AuditPipeline.skipNulls(pruned), prefix)
-      .dropDuplicates("_id")
-      .withColumn("index_date", to_date(col("datetime")).cast("string"))
+    val keyed = esActions(pruned, prefix)
     val schema = keyed.schema
     val idIdx = schema.fieldIndex("_id")
     val total = m.esTotal
@@ -246,15 +250,17 @@ object Sinks {
     */
   def writeSplunk(full: DataFrame, dir: String, index: String,
       m: SinkMetrics, maxBatchSize: Int = 500,
-      postTag: String = java.util.UUID.randomUUID().toString.take(8)): Unit = {
-    val lines = full
+      postTag: String = java.util.UUID.randomUUID().toString.take(8)): Unit =
+    writeSplunkLines(hecLines(full, index), dir, m, maxBatchSize, postTag)
+
+  /** Each record of `full` in the HEC envelope, as one string column. */
+  private[streaming] def hecLines(full: DataFrame, index: String): DataFrame =
+    full
       .withColumn("line", to_json(struct(
         struct(full.columns.toIndexedSeq.map(col): _*).as("event"),
         lit("json").as("sourcetype"),
         lit(index).as("index"))))
       .select("line")
-    writeSplunkLines(lines, dir, m, maxBatchSize, postTag)
-  }
 
   /** Same delivery semantics for pre-built HEC envelope lines (single
     * string column) — the full-fidelity path where the event JSON was

@@ -9,49 +9,61 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * {{{
   * kinesis/memory/file source                      (one micro-batch = one Lambda invoke)
-  *   → decode base64+JSON                          (lambda_function.py:45)
-  *   → enrich: @timestamp, empty-ip null-out       (lambda_function.py:46-49)
   *   → foreachBatch:
-  *       persist                                   (compute the batch once)
+  *       decode base64+JSON, persist               (lambda_function.py:45; the one cached copy)
+  *       enrich: @timestamp, empty-ip null-out     (lambda_function.py:46-49)
   *       ES sink   ← 9-field allowlist projection  (lambda_function.py:144-145)
   *       Splunk    ← full record, unless disabled  (lambda_function.py:147,106-108)
+  *       dead-letter ← rows without datetime/random_id, raw payload kept
   *       unpersist
   * }}}
   *
   * Delivery semantics as §2a: the checkpoint gives at-least-once redelivery
   * on restart; the ES side is idempotent via `_id`, the Splunk side is
-  * at-most-once per chunk. Both sinks observe the SAME persisted batch —
-  * the multi-sink fan-out the reference runs two list comprehensions for.
+  * at-most-once per chunk. Every sink reads the SAME persisted batch — the
+  * multi-sink fan-out the reference runs two list comprehensions for — and
+  * none shuffles it: each write is one narrow stage, a task per shard.
   */
 object StreamingFanOut {
 
-  /** One micro-batch through both sinks — also usable in pure batch mode
-    * (a Lambda invocation is exactly one call of this). */
+  /** One already-decoded micro-batch through both sinks — also usable in
+    * pure batch mode (a Lambda invocation is exactly one call of this). */
   def processBatch(batch: DataFrame, esDir: String, splunkDir: String,
       config: PipelineConfig, metrics: SinkMetrics,
-      batchId: Long = -1L): Unit = {
-    batch.persist()
-    try {
-      val enriched = AuditPipeline.enrich(batch)
-      Sinks.writeEs(AuditPipeline.filterForEs(enriched), esDir,
-        config.esIndexPrefix, metrics, config.esAuthMode)
-      if (!config.splunkDisabled) {
-        val tag = batchTag(batchId)
-        Sinks.writeSplunk(AuditPipeline.skipNulls(enriched), splunkDir,
-          config.splunkIndex, metrics, config.maxBatchSize, tag)
-      }
-    } finally batch.unpersist()
-  }
+      batchId: Long = -1L): Unit =
+    persisted(batch)(fanOut(_, esDir, splunkDir, config, metrics, batchId)(
+      Sinks.hecLines(_, config.splunkIndex)))
 
   private def batchTag(batchId: Long): String =
     if (batchId >= 0) f"b$batchId%06d"
     else java.util.UUID.randomUUID().toString.take(8)
 
-  /** One RAW micro-batch: decode keeping the raw payload, quarantine rows
-    * whose payload did not yield the two fields the reference reads
-    * unconditionally (`datetime`, `random_id`, lambda_function.py:80-81)
-    * into the dead-letter sink WITH their raw payload for replay, and fan
-    * the valid remainder out exactly as [[processBatch]].
+  /** Run `body` over `df` persisted, and release it however `body` ends. */
+  private def persisted(df: DataFrame)(body: DataFrame => Unit): Unit = {
+    df.persist()
+    try body(df) finally df.unpersist()
+  }
+
+  /** ES gets the enriched allowlist projection, Splunk the line `lines`
+    * builds of each enriched record with a `random_id`. Persists nothing:
+    * both read the copy the caller persisted. */
+  private def fanOut(batch: DataFrame, esDir: String, splunkDir: String,
+      config: PipelineConfig, metrics: SinkMetrics, batchId: Long)(
+      lines: DataFrame => DataFrame): Unit = {
+    val enriched = AuditPipeline.enrich(batch)
+    Sinks.writeEs(AuditPipeline.filterForEs(enriched), esDir,
+      config.esIndexPrefix, metrics, config.esAuthMode)
+    if (!config.splunkDisabled)
+      Sinks.writeSplunkLines(lines(AuditPipeline.skipNulls(enriched)), splunkDir,
+        metrics, config.maxBatchSize, batchTag(batchId))
+  }
+
+  /** One RAW micro-batch: decode keeping the raw payload, fan the rows that
+    * carry the two fields the reference reads unconditionally (`datetime`,
+    * `random_id`, lambda_function.py:80-81) out exactly as [[processBatch]],
+    * then quarantine the rest into the dead-letter sink WITH their raw
+    * payload for replay. Only `decoded` is persisted: the ES write fills
+    * the cache, and the dead-letter split then scans it.
     *
     * This is the live wiring of [[AuditPipeline.partitionValid]]: the
     * reference lets one malformed record crash the whole Lambda invoke
@@ -61,21 +73,19 @@ object StreamingFanOut {
   def processRawBatch(rawBatch: DataFrame, dataCol: String,
       esDir: String, splunkDir: String, deadLetterDir: String,
       config: PipelineConfig, metrics: SinkMetrics,
-      batchId: Long = -1L): Unit = {
-    val decoded = AuditPipeline.decodeKinesisWithRaw(rawBatch, dataCol)
-    decoded.persist()
-    try {
+      batchId: Long = -1L): Unit =
+    persisted(AuditPipeline.decodeKinesisWithRaw(rawBatch, dataCol)) { decoded =>
       val (valid, dead) = AuditPipeline.partitionValid(decoded)
+      fanOut(valid.drop("_raw"), esDir, splunkDir, config, metrics, batchId)(
+        Sinks.hecLines(_, config.splunkIndex))
       Sinks.writeDeadLetter(dead, deadLetterDir, batchTag(batchId))
-      processBatch(valid.drop("_raw"), esDir, splunkDir, config, metrics, batchId)
-    } finally decoded.unpersist()
-  }
+    }
 
-  /** Full-fidelity micro-batch on the VariantType decode path: ES gets the
-    * enriched 9-field allowlist projection exactly as [[processBatch]], but
-    * Splunk gets the COMPLETE original record — unknown payload keys a
-    * producer added yesterday included — with `@timestamp` merged at top
-    * level. This is the reference's exact fan-out asymmetry
+  /** Full-fidelity micro-batch on the VariantType decode path, in the shape
+    * of [[processRawBatch]]: ES gets the enriched 9-field allowlist
+    * projection, but Splunk gets the COMPLETE original record — unknown
+    * payload keys a producer added yesterday included — with `@timestamp`
+    * merged at top level. This is the reference's exact fan-out asymmetry
     * (lambda_function.py:144-148) preserved under schema drift, which the
     * fixed-schema path cannot do (it drops unknown keys at decode).
     *
@@ -92,38 +102,22 @@ object StreamingFanOut {
     // Lenient decode ONLY when a DLQ consumes the invalid split; with no
     // dead-letter sink the strict default keeps the reference's loud
     // whole-batch failure instead of silently vanishing poison payloads.
-    val full = AuditPipeline.decodeKinesisVariant(rawBatch, dataCol,
-      strict = deadLetterDir.isEmpty)
-    full.persist()
-    try {
-      // The variant decode keeps the raw payload column, so the dead-letter
-      // split reuses partitionValid directly — same validity pair, same
-      // quarantine-with-raw semantics as [[processRawBatch]]. Inside the
-      // try: a DLQ write failure must still release the persisted batch.
-      val decoded = deadLetterDir match {
-        case Some(dlq) =>
-          val (valid, dead) = AuditPipeline.partitionValid(full)
-          Sinks.writeDeadLetter(dead, dlq, batchTag(batchId), rawCol = dataCol)
-          valid
-        case None => full
-      }
-      val enriched = AuditPipeline.enrich(decoded)
-      Sinks.writeEs(AuditPipeline.filterForEs(enriched), esDir,
-        config.esIndexPrefix, metrics, config.esAuthMode)
-      if (!config.splunkDisabled) {
-        val tag = batchTag(batchId)
+    persisted(AuditPipeline.decodeKinesisVariant(rawBatch, dataCol,
+        strict = deadLetterDir.isEmpty)) { full =>
+      // the variant decode keeps the raw payload for the dead-letter split
+      val (valid, dead) = AuditPipeline.partitionValid(full)
+      fanOut(if (deadLetterDir.isEmpty) full else valid, esDir, splunkDir,
+          config, metrics, batchId) { records =>
         // fullRecordJson needs non-null datetime (same validity pair as
         // partitionValid) — a null would otherwise serialize as a literal
         // "null" line in the HEC archive instead of being skipped.
-        val lines = AuditPipeline.skipNulls(enriched)
-          .filter(col("datetime").isNotNull)
-          .select(
+        records.filter(col("datetime").isNotNull).select(
           concat(lit("{\"event\":"), AuditPipeline.fullRecordJson,
             lit(",\"sourcetype\":\"json\",\"index\":\"" + config.splunkIndex + "\"}"))
             .as("line"))
-        Sinks.writeSplunkLines(lines, splunkDir, metrics, config.maxBatchSize, tag)
       }
-    } finally full.unpersist()
+      deadLetterDir.foreach(Sinks.writeDeadLetter(dead, _, batchTag(batchId), rawCol = dataCol))
+    }
   }
 
   /** Start the streaming query over an already-decoded source stream.

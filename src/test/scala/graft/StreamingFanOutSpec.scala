@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.Base64
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import graft.streaming.{PipelineConfig, SinkMetrics, Sinks, StreamingFanOut}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -160,6 +164,64 @@ class StreamingFanOutSpec extends AnyFunSuite {
     assert(raws == Set(poison1, poison2),
       "dead letters must carry the original payload for replay")
     assert(dead.columns.contains("dl_batch"))
+  }
+
+  test("raw fan-out: every record is one ES action, the index keeps one doc per _id (lambda_function.py:81,84)") {
+    import spark.implicits._
+    val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
+    val metrics = SinkMetrics(spark)
+    val poison = b64("this is not json at all")
+    val raw = Seq(b64(recJson(1)), b64(recJson(1)), b64(recJson(2)), poison).toDF("data")
+    StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, dlqDir,
+      PipelineConfig(), metrics)
+
+    assert(Sinks.readEsIndex(spark, esDir).count() == 2, "one document per _id")
+    // the repeated record is a second action, as in the reference's bulk
+    // call, and counts in `success of total`
+    assert(metrics.esTotal.value == 3 && metrics.esSuccess.value == 3, metrics.summary)
+    assert(spark.read.json(s"$splunkDir/*.jsonl").count() == 3)
+    assert(spark.read.parquet(dlqDir).select("raw_payload").as[String].collect().toSeq ==
+      Seq(poison))
+  }
+
+  test("raw fan-out job shape: no shuffle, at most 3 jobs, one cached copy, released when a sink throws") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // a clean batch in 2 partitions, as two shards would deliver it
+    val raw = sc.parallelize((1 to 8).map(i => b64(recJson(i))), 2).toDF("data")
+    val jobs = new AtomicInteger
+    val shuffleBytes = new AtomicLong
+    val cachedRdds = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => cachedRdds.add(r.id))
+      }
+    }
+    val persistedBefore = sc.getPersistentRDDs.size
+    def run(esDir: String, splunkDir: String): Unit =
+      StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, tmp("dlq"),
+        PipelineConfig(), SinkMetrics(spark))
+
+    bridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      run(tmp("es"), tmp("splunk"))
+      bridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(shuffleBytes.get == 0, "no stage may shuffle the batch")
+    assert(jobs.get <= 3, s"${jobs.get} jobs")
+    assert(cachedRdds.size <= 1, s"persisted RDDs in the stages: $cachedRdds")
+    assert(sc.getPersistentRDDs.size == persistedBefore)
+
+    // a sink that throws before the cache exists (ES dir is a regular
+    // file) and one that throws after ES filled it (Splunk dir is a file)
+    val file = Files.createTempFile("not-a-dir", ".txt").toString
+    intercept[Exception](run(file, tmp("splunk")))
+    assert(sc.getPersistentRDDs.size == persistedBefore)
+    intercept[Exception](run(tmp("es"), file))
+    assert(sc.getPersistentRDDs.size == persistedBefore)
   }
 
   test("dead-letter write is idempotent per batch tag (foreachBatch retry semantics)") {
