@@ -54,6 +54,13 @@ object ShingleKernel {
     b
   }
 
+  /** A width below one word has no meaning, and the kernels' offset
+    * arithmetic assumes at least one: reject it before any of it runs.
+    * The SQL expressions check their range when built; this guards a direct
+    * Scala caller. */
+  private def requireWidth(n: Int): Unit =
+    require(n >= 1, s"word width must be >= 1, got $n")
+
   /** Word-start byte offsets of `b` split on 0x20, with sentinel
     * `starts(m) = b.length + 1` so word k spans
     * `[starts(k), starts(k+1) - 1)` uniformly (the −1 drops the
@@ -76,6 +83,7 @@ object ShingleKernel {
     * trailing empties kept — same as Spark `split(text, ' ')` / DuckDB
     * `string_split`). Order-preserving; empty array when < n words. */
   def ngrams(text: UTF8String, n: Int): ArrayData = {
+    requireWidth(n)
     val b = copyBytes(text)
     val starts = wordStarts(b)
     val m = starts.length - 1 // word count
@@ -97,6 +105,7 @@ object ShingleKernel {
     * array_join(slice(t, i*n + 1, n), ' '))` over `t = split(text, ' ')`
     * (empty text ⇒ one empty segment, same as split's [""]). */
   def segments(text: UTF8String, n: Int): ArrayData = {
+    requireWidth(n)
     val b = copyBytes(text)
     val starts = wordStarts(b)
     val m = starts.length - 1
@@ -132,6 +141,7 @@ object ShingleKernel {
   /** Distinct consecutive `n`-word shingles, first-occurrence order
     * (matches `array_distinct` semantics). */
   def shingles(text: UTF8String, n: Int): ArrayData = {
+    requireWidth(n)
     val b = copyBytes(text)
     val starts = wordStarts(b)
     val m = starts.length - 1

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -113,12 +113,14 @@ object AuditPipeline {
     * SURVEY §2a error semantics: valid rows flow on, undecodable payloads
     * are quarantined with their raw payload for replay instead of poisoning
     * redelivery forever. Validity = the two fields the reference reads
-    * unconditionally (`datetime`, `random_id`, lambda_function.py:80-81).
+    * unconditionally ([[isValidRecord]]).
     */
-  def partitionValid(decodedWithRaw: DataFrame): (DataFrame, DataFrame) = {
-    val ok = col("random_id").isNotNull && col("datetime").isNotNull
-    (decodedWithRaw.filter(ok), decodedWithRaw.filter(!ok))
-  }
+  def partitionValid(decodedWithRaw: DataFrame): (DataFrame, DataFrame) =
+    (decodedWithRaw.filter(isValidRecord), decodedWithRaw.filter(!isValidRecord))
+
+  /** A record carries the two fields the reference reads unconditionally
+    * (`datetime`, `random_id`, lambda_function.py:80-81). */
+  val isValidRecord: Column = col("random_id").isNotNull && col("datetime").isNotNull
 
   /** decodeKinesis, but keeps the raw payload column for dead-lettering. */
   def decodeKinesisWithRaw(df: DataFrame, dataCol: String): DataFrame =

@@ -121,7 +121,10 @@ object Sinks {
     * A batch with nothing to quarantine SKIPS the write entirely (a
     * zero-row dynamic-partition write would emit no files anyway, and a
     * clean epoch must never touch — let alone overwrite — existing
-    * quarantine partitions). Consequences of the layout: the DLQ
+    * quarantine partitions). That `isEmpty` guard is one job of its own,
+    * kept for direct callers; the streaming fan-out skips it, because its
+    * ES pass has already counted the dead rows ([[writeDeadRows]]).
+    * Consequences of the layout: the DLQ
     * directory exists only once something was actually quarantined
     * (readers should existence-check or read with an explicit schema),
     * and because epoch tags key overwrites, a DLQ directory belongs to
@@ -130,8 +133,13 @@ object Sinks {
     * epoch ids and replace retained, un-replayed payloads.
     * Returns rows quarantined. */
   def writeDeadLetter(dead: DataFrame, dir: String, batchTag: String,
-      rawCol: String = "_raw"): Long = {
-    if (dead.isEmpty) return 0L
+      rawCol: String = "_raw"): Long =
+    if (dead.isEmpty) 0L else writeDeadRows(dead, dir, batchTag, rawCol)
+
+  /** [[writeDeadLetter]] for a caller that already knows `dead` has rows:
+    * the write alone, no emptiness check. */
+  private[streaming] def writeDeadRows(dead: DataFrame, dir: String,
+      batchTag: String, rawCol: String): Long = {
     val obs = org.apache.spark.sql.Observation()
     val observed = dead.select(col(rawCol).as("raw_payload"))
       .withColumn("dl_batch", lit(batchTag))
@@ -199,7 +207,9 @@ object Sinks {
     *   never raised (`raise_on_error=False`), and excluded from the index
     *   write; everything else is delivered;
     * - counters report success/total exactly as the reference's
-    *   `print(f"{success} of {total}")`, over the same actions as [[writeEs]].
+    *   `print(f"{success} of {total}")`, over the same actions as [[writeEs]];
+    * - returns the documents this call indexed (0 when the index write
+    *   fails, logged as in [[writeEs]]), whatever `m` counted before.
     *
     * The delivery decision runs per-partition on executors (the sink
     * boundary — same shape as a real HTTP bulk client in foreachPartition);
@@ -230,14 +240,17 @@ object Sinks {
         ok
       }
     }
-    val spark = pruned.sparkSession
-    val okDf = spark.createDataFrame(delivered, schema)
-    try okDf.write.mode("append").partitionBy("index_date").parquet(dir)
-    catch {
+    val obs = org.apache.spark.sql.Observation()
+    val okDf = pruned.sparkSession.createDataFrame(delivered, schema)
+      .observe(obs, count(lit(1)).as("n"))
+    try {
+      okDf.write.mode("append").partitionBy("index_date").parquet(dir)
+      obs.get("n").asInstanceOf[Long]
+    } catch {
       case e: Exception =>
         System.err.println(s"[es-sink] bulk write failed (logged, not raised): ${e.getMessage}")
+        0L
     }
-    success.value
   }
 
   /** Splunk HEC simulator (lambda_function.py:90-102,115-134).

@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.util.concurrent.{CompletableFuture, CompletionException, ExecutorService, Executors}
+
 import graft.pipeline.AuditPipeline
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.count_if
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The reference's whole application (`handler`, lambda_function.py:140-148)
@@ -12,9 +16,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   → foreachBatch:
   *       decode base64+JSON, persist               (lambda_function.py:45; the one cached copy)
   *       enrich: @timestamp, empty-ip null-out     (lambda_function.py:46-49)
-  *       ES sink   ← 9-field allowlist projection  (lambda_function.py:144-145)
-  *       Splunk    ← full record, unless disabled  (lambda_function.py:147,106-108)
-  *       dead-letter ← rows without datetime/random_id, raw payload kept
+  *       ┌ ES sink ← 9-field allowlist projection  (lambda_function.py:144-145)
+  *       │           counting the dead rows on the way
+  *       └ Splunk  ← full record, unless disabled  (lambda_function.py:147,106-108)
+  *         (side by side: one job each, both awaited)
+  *       dead-letter ← rows without datetime/random_id, raw payload kept;
+  *                     written only when the ES pass counted any
   *       unpersist
   * }}}
   *
@@ -22,7 +29,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * on restart; the ES side is idempotent via `_id`, the Splunk side is
   * at-most-once per chunk. Every sink reads the SAME persisted batch — the
   * multi-sink fan-out the reference runs two list comprehensions for — and
-  * none shuffles it: each write is one narrow stage, a task per shard.
+  * none shuffles it: each write is one narrow stage, a task per shard. The
+  * two sinks do not depend on each other, so their jobs run at once, on
+  * sink threads that carry the batch thread's job group, batch id and
+  * parent SQL execution: a query's `stop()` cancels them as its own.
   */
 object StreamingFanOut {
 
@@ -31,8 +41,10 @@ object StreamingFanOut {
   def processBatch(batch: DataFrame, esDir: String, splunkDir: String,
       config: PipelineConfig, metrics: SinkMetrics,
       batchId: Long = -1L): Unit =
-    persisted(batch)(fanOut(_, esDir, splunkDir, config, metrics, batchId)(
-      Sinks.hecLines(_, config.splunkIndex)))
+    persisted(batch) { b =>
+      fanOut(b, b, esDir, splunkDir, config, metrics, batchId)(
+        Sinks.hecLines(_, config.splunkIndex))
+    }
 
   private def batchTag(batchId: Long): String =
     if (batchId >= 0) f"b$batchId%06d"
@@ -44,26 +56,76 @@ object StreamingFanOut {
     try body(df) finally df.unpersist()
   }
 
-  /** ES gets the enriched allowlist projection, Splunk the line `lines`
-    * builds of each enriched record with a `random_id`. Persists nothing:
-    * both read the copy the caller persisted. */
-  private def fanOut(batch: DataFrame, esDir: String, splunkDir: String,
-      config: PipelineConfig, metrics: SinkMetrics, batchId: Long)(
-      lines: DataFrame => DataFrame): Unit = {
-    val enriched = AuditPipeline.enrich(batch)
-    Sinks.writeEs(AuditPipeline.filterForEs(enriched), esDir,
-      config.esIndexPrefix, metrics, config.esAuthMode)
-    if (!config.splunkDisabled)
-      Sinks.writeSplunkLines(lines(AuditPipeline.skipNulls(enriched)), splunkDir,
-        metrics, config.maxBatchSize, batchTag(batchId))
+  /** The sink writes' threads, one per sink (ES, Splunk). Daemons, so a
+    * JVM whose queries have stopped can exit; they inherit no thread-local
+    * state, each write gets the batch thread's afresh. */
+  private lazy val sinkThreads: ExecutorService =
+    Executors.newFixedThreadPool(2, (r: Runnable) => {
+      val t = new Thread(null, r, "graft-fan-out-sink", 0L, false)
+      t.setDaemon(true)
+      t
+    })
+
+  /** ES gets the enriched allowlist projection of `esBatch`, Splunk the
+    * line `lines` builds of each enriched record of `batch` with a
+    * `random_id`; `esBatch` is `batch`, or `batch` read through an
+    * observer. The two writes run side by side as two jobs over the copy
+    * the caller persisted (the first to reach a partition caches it, the
+    * other reads it). Both are awaited before this returns, the first
+    * failure is rethrown after that. Returns the ES actions delivered. */
+  private def fanOut(batch: DataFrame, esBatch: DataFrame, esDir: String,
+      splunkDir: String, config: PipelineConfig, metrics: SinkMetrics,
+      batchId: Long)(lines: DataFrame => DataFrame): Long = {
+    val spark = batch.sparkSession
+    val es = bridge.withThreadLocalCaptured(spark, sinkThreads)(Sinks.writeEs(
+      AuditPipeline.filterForEs(AuditPipeline.enrich(esBatch)), esDir,
+      config.esIndexPrefix, metrics, config.esAuthMode))
+    val splunk =
+      if (config.splunkDisabled) CompletableFuture.completedFuture(())
+      else bridge.withThreadLocalCaptured(spark, sinkThreads)(Sinks.writeSplunkLines(
+        lines(AuditPipeline.skipNulls(AuditPipeline.enrich(batch))), splunkDir,
+        metrics, config.maxBatchSize, batchTag(batchId)))
+    awaitAll(es, splunk)
+    es.join()
+  }
+
+  /** Wait until every write has ended, ignoring interrupts: a write still
+    * running may read the cache the caller releases next (a stopping query
+    * cancels their jobs, so they do end). Then rethrow the first failure. */
+  private def awaitAll(writes: CompletableFuture[_]*): Unit = {
+    CompletableFuture.allOf(writes: _*).exceptionally(_ => null).join()
+    writes.foreach { w =>
+      try w.join() catch { case e: CompletionException => throw e.getCause }
+    }
+  }
+
+  /** `decoded` split on [[AuditPipeline.isValidRecord]]. `counted` is the
+    * valid split read through an observer placed below its filter, so the
+    * pass that reads it (the ES write) counts the dead rows as well. */
+  private final class DeadSplit(decoded: DataFrame) {
+    private val deadRows = Observation()
+    val (valid, dead) = AuditPipeline.partitionValid(decoded)
+    val counted: DataFrame = AuditPipeline.partitionValid(decoded.observe(
+      deadRows, count_if(!AuditPipeline.isValidRecord).as("n")))._1
+
+    /** Quarantine the dead rows if the ES pass counted any. `esRows > 0`
+      * means that pass succeeded, so its count is whole. With 0 the write
+      * may have failed (logged, not raised), and a failed execution still
+      * reports what its finished tasks observed, a part of the count, or
+      * none at all: the split itself is checked instead. */
+    def quarantine(esRows: Long, dir: String, tag: String, rawCol: String): Unit =
+      if (esRows == 0) Sinks.writeDeadLetter(dead, dir, tag, rawCol)
+      else if (deadRows.get("n").asInstanceOf[Long] > 0)
+        Sinks.writeDeadRows(dead, dir, tag, rawCol)
   }
 
   /** One RAW micro-batch: decode keeping the raw payload, fan the rows that
     * carry the two fields the reference reads unconditionally (`datetime`,
     * `random_id`, lambda_function.py:80-81) out exactly as [[processBatch]],
     * then quarantine the rest into the dead-letter sink WITH their raw
-    * payload for replay. Only `decoded` is persisted: the ES write fills
-    * the cache, and the dead-letter split then scans it.
+    * payload for replay. Only `decoded` is persisted: the sinks fill the
+    * cache, the ES write counts the rest, and the dead-letter write runs
+    * only when there is something to quarantine.
     *
     * This is the live wiring of [[AuditPipeline.partitionValid]]: the
     * reference lets one malformed record crash the whole Lambda invoke
@@ -75,10 +137,10 @@ object StreamingFanOut {
       config: PipelineConfig, metrics: SinkMetrics,
       batchId: Long = -1L): Unit =
     persisted(AuditPipeline.decodeKinesisWithRaw(rawBatch, dataCol)) { decoded =>
-      val (valid, dead) = AuditPipeline.partitionValid(decoded)
-      fanOut(valid.drop("_raw"), esDir, splunkDir, config, metrics, batchId)(
-        Sinks.hecLines(_, config.splunkIndex))
-      Sinks.writeDeadLetter(dead, deadLetterDir, batchTag(batchId))
+      val split = new DeadSplit(decoded)
+      val esRows = fanOut(split.valid.drop("_raw"), split.counted.drop("_raw"),
+        esDir, splunkDir, config, metrics, batchId)(Sinks.hecLines(_, config.splunkIndex))
+      split.quarantine(esRows, deadLetterDir, batchTag(batchId), "_raw")
     }
 
   /** Full-fidelity micro-batch on the VariantType decode path, in the shape
@@ -99,24 +161,29 @@ object StreamingFanOut {
       config: PipelineConfig, metrics: SinkMetrics,
       batchId: Long = -1L, deadLetterDir: Option[String] = None): Unit = {
     import org.apache.spark.sql.functions._
+    // fullRecordJson needs non-null datetime (same validity pair as
+    // partitionValid) — a null would otherwise serialize as a literal
+    // "null" line in the HEC archive instead of being skipped.
+    val fullLines = (records: DataFrame) =>
+      records.filter(col("datetime").isNotNull).select(
+        concat(lit("{\"event\":"), AuditPipeline.fullRecordJson,
+          lit(",\"sourcetype\":\"json\",\"index\":\"" + config.splunkIndex + "\"}"))
+          .as("line"))
     // Lenient decode ONLY when a DLQ consumes the invalid split; with no
     // dead-letter sink the strict default keeps the reference's loud
     // whole-batch failure instead of silently vanishing poison payloads.
     persisted(AuditPipeline.decodeKinesisVariant(rawBatch, dataCol,
         strict = deadLetterDir.isEmpty)) { full =>
-      // the variant decode keeps the raw payload for the dead-letter split
-      val (valid, dead) = AuditPipeline.partitionValid(full)
-      fanOut(if (deadLetterDir.isEmpty) full else valid, esDir, splunkDir,
-          config, metrics, batchId) { records =>
-        // fullRecordJson needs non-null datetime (same validity pair as
-        // partitionValid) — a null would otherwise serialize as a literal
-        // "null" line in the HEC archive instead of being skipped.
-        records.filter(col("datetime").isNotNull).select(
-          concat(lit("{\"event\":"), AuditPipeline.fullRecordJson,
-            lit(",\"sourcetype\":\"json\",\"index\":\"" + config.splunkIndex + "\"}"))
-            .as("line"))
+      deadLetterDir match {
+        case None =>
+          fanOut(full, full, esDir, splunkDir, config, metrics, batchId)(fullLines)
+        case Some(dir) =>
+          // the variant decode keeps the raw payload for the dead-letter split
+          val split = new DeadSplit(full)
+          val esRows = fanOut(split.valid, split.counted, esDir, splunkDir,
+            config, metrics, batchId)(fullLines)
+          split.quarantine(esRows, dir, batchTag(batchId), dataCol)
       }
-      deadLetterDir.foreach(Sinks.writeDeadLetter(dead, _, batchTag(batchId), rawCol = dataCol))
     }
   }
 

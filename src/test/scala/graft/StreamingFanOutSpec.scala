@@ -1,16 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.Base64
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.{Base64, Properties}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 
 import graft.streaming.{PipelineConfig, SinkMetrics, Sinks, StreamingFanOut}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
+import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import scala.jdk.CollectionConverters._
 
@@ -136,6 +140,19 @@ class StreamingFanOutSpec extends AnyFunSuite {
     assert(StreamingFanOutSpec.attempts.get("id-9") == 4, "initial + 3 retries")
   }
 
+  test("ES bulk writer returns what each call delivered, not the shared counter's total") {
+    import spark.implicits._
+    val esDir = tmp("es_bulk_calls")
+    val metrics = SinkMetrics(spark)
+    def pruned(ids: Range) = graft.pipeline.AuditPipeline.filterForEs(
+      graft.pipeline.AuditPipeline.enrich(graft.pipeline.AuditPipeline.decodeKinesis(
+        ids.map(i => b64(recJson(i))).toDF("data"), "data")))
+    assert(Sinks.writeEsBulk(pruned(1 to 3), esDir, "audit-", metrics, Sinks.acceptAllBulk) == 3)
+    assert(Sinks.writeEsBulk(pruned(4 to 8), esDir, "audit-", metrics, Sinks.acceptAllBulk) == 5)
+    assert(metrics.esTotal.value == 8 && metrics.esSuccess.value == 8, metrics.summary)
+    assert(Sinks.readEsIndex(spark, esDir).count() == 8)
+  }
+
   test("dead-letter path: malformed payloads quarantined with raw payload, valid rows flow on (SURVEY §2a error semantics)") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -184,44 +201,121 @@ class StreamingFanOutSpec extends AnyFunSuite {
       Seq(poison))
   }
 
-  test("raw fan-out job shape: no shuffle, at most 3 jobs, one cached copy, released when a sink throws") {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    // a clean batch in 2 partitions, as two shards would deliver it
-    val raw = sc.parallelize((1 to 8).map(i => b64(recJson(i))), 2).toDF("data")
-    val jobs = new AtomicInteger
+  /** What `body` starts on the context: each job's properties, each SQL
+    * execution's physical plan, the bytes its stages shuffled and the
+    * persisted RDDs they touched. */
+  private final class Recorded {
+    val jobProps = new ConcurrentLinkedQueue[Properties]
+    val plans = new ConcurrentLinkedQueue[String]
     val shuffleBytes = new AtomicLong
     val cachedRdds = ConcurrentHashMap.newKeySet[Int]()
+  }
+
+  private def recording(body: => Unit): Recorded = {
+    val sc = spark.sparkContext
+    val rec = new Recorded
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = rec.jobProps.add(e.properties)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => cachedRdds.add(r.id))
+        rec.shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => rec.cachedRdds.add(r.id))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => rec.plans.add(x.physicalPlanDescription)
+        case _ => ()
       }
     }
-    val persistedBefore = sc.getPersistentRDDs.size
-    def run(esDir: String, splunkDir: String): Unit =
-      StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, tmp("dlq"),
-        PipelineConfig(), SinkMetrics(spark))
-
     bridge.drain(sc)
     sc.addSparkListener(listener)
     try {
-      run(tmp("es"), tmp("splunk"))
+      body
       bridge.drain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(shuffleBytes.get == 0, "no stage may shuffle the batch")
-    assert(jobs.get <= 3, s"${jobs.get} jobs")
-    assert(cachedRdds.size <= 1, s"persisted RDDs in the stages: $cachedRdds")
-    assert(sc.getPersistentRDDs.size == persistedBefore)
+    rec
+  }
 
-    // a sink that throws before the cache exists (ES dir is a regular
-    // file) and one that throws after ES filled it (Splunk dir is a file)
-    val file = Files.createTempFile("not-a-dir", ".txt").toString
-    intercept[Exception](run(file, tmp("splunk")))
-    assert(sc.getPersistentRDDs.size == persistedBefore)
-    intercept[Exception](run(tmp("es"), file))
-    assert(sc.getPersistentRDDs.size == persistedBefore)
+  test("raw fan-out job shape: no shuffle, at most 3 jobs, one cached copy, released when a sink throws") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // batches in 2 partitions, as two shards would deliver them
+    val clean = sc.parallelize((1 to 8).map(i => b64(recJson(i))), 2).toDF("data")
+    val dirty = sc.parallelize((1 to 8).map(i => b64(recJson(i))) :+ b64("not json"), 2)
+      .toDF("data")
+    val persistedBefore = sc.getPersistentRDDs.size
+    def run(raw: org.apache.spark.sql.DataFrame, esDir: String, splunkDir: String): Unit =
+      StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, tmp("dlq"),
+        PipelineConfig(), SinkMetrics(spark))
+    def settled(): Unit = {
+      bridge.drain(sc)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty, "a sink job outlived the call")
+      assert(sc.getPersistentRDDs.size == persistedBefore, "the batch is still cached")
+    }
+
+    sc.setJobGroup("fan-out-shape", "job shape")
+    sc.setLocalProperty("graft.test.caller", "shape")
+    try {
+      val cleanRun = recording(run(clean, tmp("es"), tmp("splunk")))
+      settled()
+      val dirtyRun = recording(run(dirty, tmp("es"), tmp("splunk")))
+      settled()
+
+      assert(cleanRun.jobProps.size == 2, s"${cleanRun.jobProps.size} jobs on a clean batch")
+      assert(!cleanRun.plans.asScala.exists(_.contains("CollectLimit")),
+        "a clean batch needs no emptiness probe")
+      assert(dirtyRun.jobProps.size == 3, s"${dirtyRun.jobProps.size} jobs on a batch with poison")
+      for (r <- Seq(cleanRun, dirtyRun)) {
+        assert(r.shuffleBytes.get == 0, "no stage may shuffle the batch")
+        assert(r.cachedRdds.size <= 1, s"persisted RDDs in the stages: ${r.cachedRdds}")
+        for (p <- r.jobProps.asScala) {
+          assert(p.getProperty("spark.jobGroup.id") == "fan-out-shape")
+          assert(p.getProperty("graft.test.caller") == "shape")
+        }
+      }
+
+      // a sink that throws before any job (ES dir is a regular file) and
+      // one whose directory Splunk cannot create: the other sink still
+      // runs to its end, the failure surfaces, the cache is released
+      val file = Files.createTempFile("not-a-dir", ".txt").toString
+      intercept[Exception](run(clean, file, tmp("splunk")))
+      settled()
+      intercept[Exception](run(clean, tmp("es"), file))
+      settled()
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.test.caller", null)
+    }
+  }
+
+  test("ES write failing inside its job: logged, Splunk gets every valid line, poison still quarantined") {
+    import spark.implicits._
+    implicit val signaler: Signaler = ThreadSignaler
+    val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
+    // the write's tasks put their files under `_temporary/0/_temporary`:
+    // a regular file there fails each task, so the job fails after the
+    // transport marker was written and after the job was set up
+    Files.createDirectories(Paths.get(esDir, "_temporary", "0"))
+    Files.createFile(Paths.get(esDir, "_temporary", "0", "_temporary"))
+    val metrics = SinkMetrics(spark)
+    val poison = b64("this is not json at all")
+    val raw = ((1 to 6).map(i => b64(recJson(i))) :+ poison).toDF("data")
+
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try failAfter(Span(60, Seconds)) {
+      StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, dlqDir,
+        PipelineConfig(), metrics)
+    } finally System.setErr(stderr)
+
+    assert(err.toString.contains("[es-sink] bulk write failed"), "the ES failure is logged")
+    assert(Sinks.readTransportMeta(esDir).contains("auth_mode"))
+    assert(metrics.esSuccess.value == 0, metrics.summary)
+    assert(spark.read.json(s"$splunkDir/*.jsonl").count() == 6)
+    assert(metrics.splunkSuccess.value == 6 && metrics.splunkTotal.value == 6, metrics.summary)
+    assert(Files.list(Paths.get(dlqDir)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith("dl_batch=")), "the poison was not quarantined")
+    assert(spark.read.parquet(dlqDir).select("raw_payload").as[String].collect().toSeq ==
+      Seq(poison))
   }
 
   test("dead-letter write is idempotent per batch tag (foreachBatch retry semantics)") {

@@ -133,4 +133,19 @@ class TextKernelsSpec extends AnyFunSuite {
       assert(k == d, s"kernel=$k declarative=$d")
     }
   }
+
+  test("shingle kernel rejects a width below one word when called directly") {
+    import graft.functions.ShingleKernel
+    import org.apache.spark.unsafe.types.UTF8String
+    val text = UTF8String.fromString("a b c")
+    for (n <- Seq(0, -1, Int.MinValue)) {
+      intercept[IllegalArgumentException](ShingleKernel.ngrams(text, n))
+      intercept[IllegalArgumentException](ShingleKernel.segments(text, n))
+      intercept[IllegalArgumentException](ShingleKernel.shingles(text, n))
+    }
+    // width 1 is the smallest valid one
+    assert(ShingleKernel.ngrams(text, 1).numElements() == 3)
+    assert(ShingleKernel.segments(text, 1).numElements() == 3)
+    assert(ShingleKernel.shingles(text, 1).numElements() == 3)
+  }
 }
