@@ -119,8 +119,11 @@ object AuditPipeline {
     (decodedWithRaw.filter(isValidRecord), decodedWithRaw.filter(!isValidRecord))
 
   /** A record carries the two fields the reference reads unconditionally
-    * (`datetime`, `random_id`, lambda_function.py:80-81). */
-  val isValidRecord: Column = col("random_id").isNotNull && col("datetime").isNotNull
+    * (`datetime`, `random_id`, lambda_function.py:80-81), and its
+    * `datetime` parses as a date: the daily index is routed on it
+    * (lambda_function.py:80), so a malformed one is quarantined instead of
+    * failing its batch. */
+  val isValidRecord: Column = col("random_id").isNotNull && try_to_date(col("datetime")).isNotNull
 
   /** decodeKinesis, but keeps the raw payload column for dead-lettering. */
   def decodeKinesisWithRaw(df: DataFrame, dataCol: String): DataFrame =

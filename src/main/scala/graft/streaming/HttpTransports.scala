@@ -23,8 +23,8 @@ import java.nio.charset.StandardCharsets
   *    `Sinks.writeEsBulk` re-sends alone up to 3 times before logging and
   *    dropping (`helpers.bulk(..., max_retries=3, raise_on_error=False)`,
   *    lambda_function.py:84-86). A transport-level failure here (refused,
-  *    timeout, 5xx) throws — writeEsBulk treats the whole chunk as the
-  *    failure unit in that case, exactly like the reference's client.
+  *    timeout, 5xx) throws — the ES writer then logs and drops every
+  *    document still pending in that request, and goes on.
   *
   * LiveSocketTransportSpec drives both against a real loopback
   * `HttpServer` — timeout expiry, partial bulk failures, chunk drops —

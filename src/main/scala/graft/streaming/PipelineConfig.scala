@@ -4,7 +4,7 @@ package graft.streaming
   * reference uses HTTP basic auth when its secret carries master-user
   * credentials, and falls back to an AWS SigV4 request signer otherwise.
   * No network exists in this harness, so the mode is carried as sink
-  * metadata (see [[Sinks.writeEs]]) rather than a live client. */
+  * metadata (see [[Sinks.readTransportMeta]]) rather than a live client. */
 sealed trait AuthMode { def name: String }
 object AuthMode {
   /** `(master_user_name, master_user_password)` basic-auth tuple. */

@@ -1,24 +1,37 @@
 package graft.streaming
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-import graft.pipeline.AuditPipeline
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
 /** Success/total delivery counters, one pair per sink — the reference's
   * `print(f"{success} of {total} ...")` metrics (lambda_function.py:84-88,
   * 129-138) as Spark accumulators (merge correctly across tasks/retries at
-  * any executor count). */
+  * any executor count) — and the rows the fan-out quarantined. */
 final case class SinkMetrics(
     esSuccess: LongAccumulator, esTotal: LongAccumulator,
-    splunkSuccess: LongAccumulator, splunkTotal: LongAccumulator) {
+    splunkSuccess: LongAccumulator, splunkTotal: LongAccumulator,
+    deadLettered: LongAccumulator) {
   def summary: String =
     s"es: ${esSuccess.value} of ${esTotal.value}; " +
-      s"splunk: ${splunkSuccess.value} of ${splunkTotal.value}"
+      s"splunk: ${splunkSuccess.value} of ${splunkTotal.value}; " +
+      s"dead-lettered: ${deadLettered.value}"
 }
 
 object SinkMetrics {
@@ -26,64 +39,38 @@ object SinkMetrics {
     spark.sparkContext.longAccumulator("es_success"),
     spark.sparkContext.longAccumulator("es_total"),
     spark.sparkContext.longAccumulator("splunk_success"),
-    spark.sparkContext.longAccumulator("splunk_total"))
+    spark.sparkContext.longAccumulator("splunk_total"),
+    spark.sparkContext.longAccumulator("dead_lettered"))
 }
 
-/** The two sink simulators, with the reference's observable semantics.
+/** The three sink simulators, with the reference's observable semantics.
   *
-  * No network exists in this harness, so OpenSearch becomes a daily-
-  * partitioned parquet "index" and Splunk HEC becomes chunked JSON-lines
-  * files — but partitioning, idempotency keys, batching, envelope shape, and
-  * delivery semantics match §2a's error-semantics notes exactly.
+  * No network exists here, so OpenSearch becomes a daily-partitioned
+  * parquet "index", Splunk HEC chunked JSON-lines files and the
+  * dead-letter queue parquet per batch; partitioning, idempotency keys,
+  * batching, envelope shape and delivery semantics match §2a. Each sink has
+  * one writer, run by a delivery pass ([[deliver]]). Layout, by batch tag:
+  * {{{
+  * <es>/_transport.json, <es>/index_date=<day>/part-<tag>-<task>.parquet
+  * <splunk>/post-<tag>-<task>-<chunk>.jsonl
+  * <dlq>/dl_batch=<tag>/part-<task>.parquet   (column raw_payload)
+  * }}}
+  * so a replayed epoch replaces its own files. A task writes its parquet
+  * files itself (Spark's `ParquetWriteSupport` on parquet-java's
+  * `LocalOutputFile`) under a hidden name renamed into place when complete,
+  * so readers never see a torn file. Spark's file committer cost more than
+  * a live trigger's rows: on 4 vCPU a 400-row ES write in 4 tasks forked 22
+  * `chmod` processes (Hadoop's local file system without its native
+  * library) and deserialized a Hadoop `Configuration` per task, 265 ms
+  * against 55 ms for the Splunk post of the same rows.
   */
 object Sinks {
 
-  /** OpenSearch bulk-upsert simulator (lambda_function.py:56-88).
-    *
-    * - daily routing: `_index = prefix + date(datetime)` → `partitionBy` on
-    *   `index_date` (the file analogue of per-day indices)
-    * - idempotency: `_id = random_id`, one bulk action per record as in
-    *   the reference (lambda_function.py:81,84): an `_id` repeated in a
-    *   batch or redelivered later is written again (OpenSearch updates the
-    *   doc), and [[readEsIndex]] keeps one document per `_id` — "at-least-
-    *   once delivery made idempotent by the key". With no in-batch dedup
-    *   the write is one narrow stage, no exchange; the counters count
-    *   actions, duplicates included (the reference's `success of total`).
-    * - errors: bulk failures are logged, not raised (raise_on_error=False):
-    *   the write is wrapped, failure returns 0 delivered.
-    */
-  def writeEs(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
-      authMode: AuthMode = AuthMode.SigV4): Long = {
-    writeTransportMeta(dir, authMode)
-    // Observation rides along the write job — no separate count() pass over
-    // the batch (at 100 TB a second full pass per micro-batch is real money).
-    val obs = org.apache.spark.sql.Observation()
-    val observed = esActions(pruned, prefix).observe(obs, count(lit(1)).as("n"))
-    try {
-      observed.write.mode("append").partitionBy("index_date").parquet(dir)
-      val rows = obs.get("n").asInstanceOf[Long]
-      m.esTotal.add(rows)
-      m.esSuccess.add(rows)
-      rows
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[es-sink] bulk write failed (logged, not raised): ${e.getMessage}")
-        0L
-    }
-  }
-
-  /** Both ES writers' bulk actions: one per record with a `random_id`,
-    * keyed and routed to its `index_date` partition. */
-  private def esActions(pruned: DataFrame, prefix: String): DataFrame =
-    AuditPipeline.withRoutingKeys(AuditPipeline.skipNulls(pruned), prefix)
-      .withColumn("index_date", to_date(col("datetime")).cast("string"))
-
   /** Record the transport configuration a real client would be built with
     * (lambda_function.py:61-74: auth mode + port 443 TLS + gzip + cert
-    * verification) as a sidecar marker in the index dir — the simulator's
-    * observable stand-in for the OpenSearch client kwargs. Driver-side,
-    * tiny, idempotent (last write wins, like reconnecting a client). */
-  private def writeTransportMeta(dir: String, authMode: AuthMode): Unit = {
+    * verification) as a sidecar marker in the index dir, the stand-in for
+    * the OpenSearch client kwargs. Driver-side; last write wins. */
+  private[streaming] def writeTransportMeta(dir: String, authMode: AuthMode): Unit = {
     Files.createDirectories(Paths.get(dir))
     val meta = s"""{"auth_mode":"${authMode.name}","port":443,"use_ssl":true,""" +
       """"http_compress":true,"verify_certs":true}"""
@@ -100,67 +87,28 @@ object Sinks {
   /** Read the simulated index as an OpenSearch reader observes it: one
     * document per `_id`, however often it was sent. Which copy is kept is
     * unspecified; a redelivery resends the same record, so copies agree.
-    * The `_transport` marker is invisible here — `_`-prefixed files are
-    * metadata by Hadoop convention and the parquet reader skips them. */
+    * The `_transport` marker and unfinished (hidden) files are invisible
+    * here: the parquet reader skips `_`- and `.`-prefixed files. */
   def readEsIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).dropDuplicates("_id")
 
-  /** Dead-letter sink: quarantine rows that failed decode/validation, with
-    * their RAW payload so they can be replayed after a fix. The reference
-    * has no such path — a malformed record crashes the whole batch and
-    * poisons at-least-once redelivery forever (lambda_function.py:45,141);
-    * this is the stricter-than-reference option SURVEY §2a documents.
-    * Parquet partitioned by batch tag with DYNAMIC partition overwrite, so
-    * a foreachBatch retry of the same epoch replaces its own partition
-    * instead of appending duplicate quarantine rows — the same
-    * replay-idempotence the ES sink gets from its `_id` and the Splunk
-    * sink from its deterministic chunk tag. (With an ad-hoc random tag —
-    * batchId < 0 — each call still lands in a fresh partition, i.e. plain
-    * append.)
-    *
-    * A batch with nothing to quarantine SKIPS the write entirely (a
-    * zero-row dynamic-partition write would emit no files anyway, and a
-    * clean epoch must never touch — let alone overwrite — existing
-    * quarantine partitions). That `isEmpty` guard is one job of its own,
-    * kept for direct callers; the streaming fan-out skips it, because its
-    * ES pass has already counted the dead rows ([[writeDeadRows]]).
-    * Consequences of the layout: the DLQ
-    * directory exists only once something was actually quarantined
-    * (readers should existence-check or read with an explicit schema),
-    * and because epoch tags key overwrites, a DLQ directory belongs to
-    * ONE streaming query's checkpoint lineage — pointing a second query
-    * (or a checkpoint-reset restart) at the same directory would reuse
-    * epoch ids and replace retained, un-replayed payloads.
-    * Returns rows quarantined. */
-  def writeDeadLetter(dead: DataFrame, dir: String, batchTag: String,
-      rawCol: String = "_raw"): Long =
-    if (dead.isEmpty) 0L else writeDeadRows(dead, dir, batchTag, rawCol)
+  /** A record's day, the ES routing key; null when `datetime` is missing
+    * or does not parse (never an error, whatever the ANSI mode). */
+  private val day: Column = try_to_date(col("datetime")).cast("string")
 
-  /** [[writeDeadLetter]] for a caller that already knows `dead` has rows:
-    * the write alone, no emptiness check. */
-  private[streaming] def writeDeadRows(dead: DataFrame, dir: String,
-      batchTag: String, rawCol: String): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    val observed = dead.select(col(rawCol).as("raw_payload"))
-      .withColumn("dl_batch", lit(batchTag))
-      .observe(obs, count(lit(1)).as("n"))
-    observed.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("dl_batch")
-      .parquet(dir)
-    obs.get("n").asInstanceOf[Long]
-  }
+  /** The ES writer's columns of a pass: `_es`, the bulk action of each row
+    * where `keep` holds — `pruned`'s columns, `_index = prefix + day` and
+    * `_id = random_id` (lambda_function.py:80-81) — and `_day`, its day. */
+  private[streaming] def esColumns(pruned: DataFrame, prefix: String, keep: Column): Seq[Column] =
+    Seq(when(keep, struct(pruned.columns.toIndexedSeq.map(col) :+
+        concat(lit(prefix), day).as("_index") :+ col("random_id").as("_id"): _*)).as("_es"),
+      day.as("_day"))
 
   /** The OpenSearch HTTP boundary: one bulk round-trip. Given a chunk's doc
     * `_id`s, return the subset that FAILED this attempt (the per-document
-    * rejections a real bulk response itemizes, e.g. 429s). A real deployment
-    * implements this with an HTTP bulk client built from the
-    * [[writeTransportMeta]] kwargs (lambda_function.py:61-74,84); this
-    * harness plugs in simulators / fault injectors. SAM trait so existing
-    * `ids => …` literals convert unchanged; extends Serializable because the
-    * transport runs inside executor tasks (foreachPartition — the same place
-    * a real per-partition HTTP client would live). */
+    * rejections a real bulk response itemizes, e.g. 429s); a real client is
+    * built from the [[writeTransportMeta]] kwargs (lambda_function.py:61-74,
+    * 84). A SAM trait, Serializable: it runs inside executor tasks. */
   trait BulkTransport extends Serializable {
     def apply(ids: Seq[String]): Seq[String]
   }
@@ -169,12 +117,46 @@ object Sinks {
     * (a real cluster with no rejections is observationally identical). */
   val acceptAllBulk: BulkTransport = (_: Seq[String]) => Seq.empty
 
+  /** OpenSearch bulk upsert (lambda_function.py:56-88: `helpers.bulk(client,
+    * actions, max_retries=3, raise_on_error=False)`) of the rows of `pruned`
+    * with a `random_id`, one action each (a repeated `_id` is written again;
+    * [[readEsIndex]] keeps one document per `_id`). Each ≤`chunkSize` chunk
+    * of a partition is one request; documents the transport rejects are
+    * re-sent alone up to `maxRetries` times (a throw fails those pending).
+    * Documents still failing, without a parseable `datetime` (no daily
+    * index), or whose index file cannot be written are LOGGED and dropped,
+    * never raised. Counters report success/total as the reference's
+    * `print(f"{success} of {total}")`; returns the documents indexed. */
+  def writeEsBulk(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
+      transport: BulkTransport, maxRetries: Int = 3, chunkSize: Int = 500): Long = {
+    Files.createDirectories(Paths.get(dir))
+    deliver(pruned.select(esColumns(pruned, prefix, col("random_id").isNotNull): _*),
+      Seq(EsBulk(dir, randomTag(), m, transport, maxRetries, chunkSize))).head
+  }
+
+  /** Dead-letter sink: quarantine rows that failed decode/validation with
+    * their RAW payload, for replay after a fix. The reference has no such
+    * path — a malformed record crashes the whole batch and poisons
+    * at-least-once redelivery forever (lambda_function.py:45,141); this is
+    * the stricter option SURVEY §2a documents. Files are named by
+    * `batchTag` and task, so an epoch retry replaces its own rows. A task
+    * with nothing to quarantine opens no file: a clean epoch never touches
+    * retained rows, and the directory exists only once something was
+    * quarantined. Epoch tags key overwrites, so a DLQ directory belongs to
+    * ONE query's checkpoint lineage. Returns rows quarantined. */
+  def writeDeadLetter(dead: DataFrame, dir: String, batchTag: String,
+      rawCol: String = "_raw"): Long =
+    deliver(dead.select(deadColumn(lit(true), rawCol)), Seq(DeadLetter(dir, batchTag))).head
+
+  /** The dead-letter writer's column of a pass: `_dead`, the raw payload
+    * of each row where `quarantine` holds. */
+  private[streaming] def deadColumn(quarantine: Column, rawCol: String): Column =
+    when(quarantine, struct(col(rawCol).as("raw_payload"))).as("_dead")
+
   /** The Splunk HEC HTTP boundary: one POST of ≤maxBatchSize envelope lines
     * (lambda_function.py:90-102: `requests.post(hec_url, …, timeout=12)`).
-    * Throwing signals transport failure → the caller drops the chunk and
-    * continues (at-most-once per post, reference returns 0 and moves on).
-    * `partitionId`/`chunkNo` identify the post within the batch so an
-    * implementation can name artifacts or tag telemetry deterministically.
+    * Throwing signals transport failure: the chunk is dropped (at-most-once
+    * per post). `partitionId`/`chunkNo` name the post within the batch.
     * Runs on executors — implementations must be Serializable. */
   trait HecTransport extends Serializable {
     def post(partitionId: Int, chunkNo: Int, lines: Seq[String]): Unit
@@ -185,10 +167,8 @@ object Sinks {
     * their own posts instead of duplicating them. */
   final case class JsonlFileHec(dir: String, postTag: String) extends HecTransport {
     override def post(partitionId: Int, chunkNo: Int, lines: Seq[String]): Unit = {
-      // Create the target dir here, not only in writeSplunk: a transport
-      // constructed directly for writeSplunkVia against a fresh dir would
-      // otherwise throw NoSuchFileException inside the per-chunk catch,
-      // which reads as a transport 503 and silently drops EVERY chunk.
+      // A missing dir would throw inside the per-chunk catch, which reads
+      // as a transport 503 and silently drops EVERY chunk.
       Files.createDirectories(Paths.get(dir))
       val path = Paths.get(dir, f"post-$postTag-$partitionId%05d-$chunkNo%05d.jsonl")
       Files.write(path, lines.mkString("\n").getBytes(StandardCharsets.UTF_8),
@@ -196,108 +176,144 @@ object Sinks {
     }
   }
 
-  /** OpenSearch bulk upsert with PER-DOCUMENT partial-failure + retry
-    * semantics (lambda_function.py:84-86: `helpers.bulk(client, actions,
-    * max_retries=3, raise_on_error=False)`):
-    *
-    * - each ≤`chunkSize` chunk of a partition is one bulk request;
-    * - documents the transport rejects are re-sent — alone, not the whole
-    *   chunk — up to `maxRetries` additional attempts;
-    * - documents still failing after the retries are LOGGED and dropped,
-    *   never raised (`raise_on_error=False`), and excluded from the index
-    *   write; everything else is delivered;
-    * - counters report success/total exactly as the reference's
-    *   `print(f"{success} of {total}")`, over the same actions as [[writeEs]];
-    * - returns the documents this call indexed (0 when the index write
-    *   fails, logged as in [[writeEs]]), whatever `m` counted before.
-    *
-    * The delivery decision runs per-partition on executors (the sink
-    * boundary — same shape as a real HTTP bulk client in foreachPartition);
-    * the surviving rows then flow to the daily-partitioned parquet index.
-    */
-  def writeEsBulk(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
-      transport: BulkTransport, maxRetries: Int = 3, chunkSize: Int = 500): Long = {
-    val keyed = esActions(pruned, prefix)
-    val schema = keyed.schema
-    val idIdx = schema.fieldIndex("_id")
-    val total = m.esTotal
-    val success = m.esSuccess
-    val delivered = keyed.rdd.mapPartitions { it =>
-      it.grouped(chunkSize).flatMap { chunk =>
-        total.add(chunk.size)
-        var failed = transport(chunk.map(_.getString(idIdx))).toSet
-        var attempt = 0
-        while (failed.nonEmpty && attempt < maxRetries) {
-          failed = transport(failed.toSeq.sorted).toSet
-          attempt += 1
-        }
-        if (failed.nonEmpty)
-          System.err.println(
-            s"[es-sink] ${failed.size} document(s) failed after $maxRetries retries " +
-              s"(logged, not raised): ${failed.toSeq.sorted.take(10).mkString(", ")}")
-        val ok = chunk.filter(r => !failed.contains(r.getString(idIdx)))
-        success.add(ok.size)
-        ok
-      }
-    }
-    val obs = org.apache.spark.sql.Observation()
-    val okDf = pruned.sparkSession.createDataFrame(delivered, schema)
-      .observe(obs, count(lit(1)).as("n"))
-    try {
-      okDf.write.mode("append").partitionBy("index_date").parquet(dir)
-      obs.get("n").asInstanceOf[Long]
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[es-sink] bulk write failed (logged, not raised): ${e.getMessage}")
-        0L
-    }
-  }
-
-  /** Splunk HEC simulator (lambda_function.py:90-102,115-134).
-    *
-    * Wraps every record in the HEC envelope {"event":…, "sourcetype":"json",
-    * "index":…}, then each task posts its partition in chunks of ≤500 — one
-    * "HTTP post" = one JSON-lines file. A failed post is logged and dropped
-    * (at-most-once per batch, reference returns 0 and continues). Returns
-    * the number of events delivered.
-    */
+  /** Splunk HEC simulator (lambda_function.py:90-102,115-134): every record
+    * in the HEC envelope {"event":…, "sourcetype":"json", "index":…}, each
+    * task's lines posted in chunks of ≤500, one post = one JSON-lines file. */
   def writeSplunk(full: DataFrame, dir: String, index: String,
       m: SinkMetrics, maxBatchSize: Int = 500,
-      postTag: String = java.util.UUID.randomUUID().toString.take(8)): Unit =
-    writeSplunkLines(hecLines(full, index), dir, m, maxBatchSize, postTag)
+      postTag: String = randomTag()): Unit =
+    writeSplunkVia(full.select(hecLine(full, index)), JsonlFileHec(dir, postTag), m, maxBatchSize)
 
   /** Each record of `full` in the HEC envelope, as one string column. */
-  private[streaming] def hecLines(full: DataFrame, index: String): DataFrame =
-    full
-      .withColumn("line", to_json(struct(
-        struct(full.columns.toIndexedSeq.map(col): _*).as("event"),
-        lit("json").as("sourcetype"),
-        lit(index).as("index"))))
-      .select("line")
+  private[streaming] def hecLine(full: DataFrame, index: String): Column =
+    to_json(struct(
+      struct(full.columns.toIndexedSeq.map(col): _*).as("event"),
+      lit("json").as("sourcetype"),
+      lit(index).as("index")))
 
-  /** Same delivery semantics for pre-built HEC envelope lines (single
-    * string column) — the full-fidelity path where the event JSON was
-    * assembled upstream (e.g. from a variant record,
-    * AuditPipeline.fullRecordJson) rather than from fixed columns. */
-  def writeSplunkLines(lines: DataFrame, dir: String,
-      m: SinkMetrics, maxBatchSize: Int = 500,
-      postTag: String = java.util.UUID.randomUUID().toString.take(8)): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    writeSplunkVia(lines, JsonlFileHec(dir, postTag), m, maxBatchSize)
+  /** Splunk delivery over any [[HecTransport]]: chunking, counters and the
+    * at-most-once drop of a failed post do not depend on the transport. */
+  def writeSplunkVia(lines: DataFrame, transport: HecTransport,
+      m: SinkMetrics, maxBatchSize: Int = 500): Unit =
+    deliver(lines.select(col(lines.columns.head).as("_line")),
+      Seq(Hec(transport, maxBatchSize, m)))
+
+  private[streaming] def randomTag(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** One delivery pass over `rows`, which carry the columns `writers` read:
+    * a single job in which each task reads its partition once and feeds
+    * every writer. Returns what each writer delivered, in order. */
+  private[streaming] def deliver(rows: DataFrame, writers: Seq[Writer]): Seq[Long] = {
+    val schema = rows.schema
+    val perTask = rows.sparkSession.sparkContext.runJob(rows.queryExecution.toRdd,
+      (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        val open = writers.map(_.open(ctx, schema))
+        it.foreach(r => open.foreach(_.add(r)))
+        open.map(_.close())
+      })
+    writers.indices.map(i => perTask.map(_(i)).sum)
   }
 
-  /** Delivery semantics over any [[HecTransport]] — the chunking, counters,
-    * and at-most-once drop-on-failure are transport-independent; only the
-    * POST itself is behind the trait. */
-  def writeSplunkVia(lines: DataFrame, transport: HecTransport,
-      m: SinkMetrics, maxBatchSize: Int = 500): Unit = {
-    lines.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val pid = TaskContext.getPartitionId()
-      var chunkNo = 0
-      it.map(_.getString(0)).grouped(maxBatchSize).foreach { chunk =>
+  /** A writer of a delivery pass; `open` gives its side in one task. */
+  private[streaming] sealed trait Writer extends Serializable {
+    def open(ctx: TaskContext, schema: StructType): TaskWriter
+  }
+
+  private[streaming] trait TaskWriter {
+    def add(row: InternalRow): Unit
+    def close(): Long // what the task delivered
+  }
+
+  /** The ES writer (see [[writeEsBulk]]): reads `_es` and `_day`, writes
+    * each day's accepted documents to `index_date=<day>/part-<tag>-<task>`.
+    * The first file error is logged and ends the task's ES delivery. */
+  private[streaming] final case class EsBulk(dir: String, tag: String, m: SinkMetrics,
+      transport: BulkTransport = acceptAllBulk, maxRetries: Int = 3, chunkSize: Int = 500)
+      extends Writer {
+    def open(ctx: TaskContext, schema: StructType): TaskWriter = new TaskWriter {
+      private val docAt = schema.fieldIndex("_es")
+      private val dayAt = schema.fieldIndex("_day")
+      private val docSchema = schema(docAt).dataType.asInstanceOf[StructType]
+      private val idAt = docSchema.fieldIndex("_id")
+      private val chunk = mutable.ArrayBuffer.empty[(String, String, InternalRow)]
+      private val files = new ParquetFiles(f"part-$tag-${ctx.partitionId()}%05d.parquet", docSchema)
+      private var failed = false
+
+      def add(row: InternalRow): Unit = if (!row.isNullAt(docAt)) {
+        val doc = row.getStruct(docAt, docSchema.length)
+        val id = doc.getUTF8String(idAt).toString
+        if (row.isNullAt(dayAt)) {
+          m.esTotal.add(1)
+          System.err.println(s"[es-sink] document $id has no parseable datetime, " +
+            "no index to route to (logged, not raised)")
+        } else {
+          chunk += ((id, row.getUTF8String(dayAt).toString, doc.copy()))
+          if (chunk.size == chunkSize) send()
+        }
+      }
+
+      private def send(): Unit = {
+        m.esTotal.add(chunk.size)
+        val rejected = bulk(chunk.map(_._1).toSeq)
+        fileErrors(for ((id, d, doc) <- chunk if !rejected(id))
+          files.write(Paths.get(dir, s"index_date=$d"), doc))
+        chunk.clear()
+      }
+
+      /** One bulk request: the ids still failing after the retries. */
+      private def bulk(ids: Seq[String]): Set[String] = {
+        var failed = ids.toSet
+        var attempt = 0
+        val thrown = try {
+          failed = transport(ids).toSet
+          while (failed.nonEmpty && attempt < maxRetries) {
+            failed = transport(failed.toSeq.sorted).toSet
+            attempt += 1
+          }
+          ""
+        } catch { case e: Exception => s", the transport threw: ${e.getMessage}" }
+        if (failed.nonEmpty)
+          System.err.println(s"[es-sink] ${failed.size} document(s) failed after $attempt " +
+            s"retries$thrown (logged, not raised): ${failed.toSeq.sorted.take(10).mkString(", ")}")
+        failed
+      }
+
+      private def fileErrors(body: => Unit): Unit = if (!failed) {
+        try body catch {
+          case e: IOException =>
+            System.err.println(s"[es-sink] bulk write failed (logged, not raised): $e")
+            failed = true
+            files.abort()
+        }
+      }
+
+      def close(): Long = {
+        if (chunk.nonEmpty) send()
+        fileErrors(files.commit())
+        m.esSuccess.add(files.committed)
+        files.committed
+      }
+    }
+  }
+
+  /** The Splunk writer (see [[writeSplunkVia]]): reads `_line`, posts each
+    * task's lines in chunks of ≤`maxBatchSize`. Delivers no count. */
+  private[streaming] final case class Hec(transport: HecTransport, maxBatchSize: Int,
+      m: SinkMetrics) extends Writer {
+    def open(ctx: TaskContext, schema: StructType): TaskWriter = new TaskWriter {
+      private val lineAt = schema.fieldIndex("_line")
+      private val chunk = mutable.ArrayBuffer.empty[String]
+      private var chunkNo = 0
+
+      def add(row: InternalRow): Unit = if (!row.isNullAt(lineAt)) {
+        chunk += row.getUTF8String(lineAt).toString
+        if (chunk.size == maxBatchSize) post()
+      }
+
+      private def post(): Unit = {
         m.splunkTotal.add(chunk.size)
         try {
-          transport.post(pid, chunkNo, chunk)
+          transport.post(ctx.partitionId(), chunkNo, chunk.toSeq)
           m.splunkSuccess.add(chunk.size)
         } catch {
           case e: Exception =>
@@ -305,7 +321,70 @@ object Sinks {
             System.err.println(s"[splunk-sink] post failed, batch dropped: ${e.getMessage}")
         }
         chunkNo += 1
+        chunk.clear()
       }
+
+      def close(): Long = { if (chunk.nonEmpty) post(); 0L }
     }
+  }
+
+  /** The dead-letter writer (see [[writeDeadLetter]]): reads `_dead`,
+    * writes `dl_batch=<tag>/part-<task>`. A failure here fails the pass:
+    * quarantined rows are never dropped. */
+  private[streaming] final case class DeadLetter(dir: String, tag: String) extends Writer {
+    def open(ctx: TaskContext, schema: StructType): TaskWriter = new TaskWriter {
+      private val deadAt = schema.fieldIndex("_dead")
+      private val rowSchema = schema(deadAt).dataType.asInstanceOf[StructType]
+      private val files = new ParquetFiles(f"part-${ctx.partitionId()}%05d.parquet", rowSchema)
+
+      def add(row: InternalRow): Unit = if (!row.isNullAt(deadAt))
+        files.write(Paths.get(dir, s"dl_batch=$tag"), row.getStruct(deadAt, rowSchema.length))
+
+      def close(): Long = { files.commit(); files.committed }
+    }
+  }
+
+  /** A task's parquet files of one writer, one per directory, each named
+    * `name`: written under a hidden temp name, renamed over `name`
+    * atomically by [[commit]], deleted if the task fails first. A
+    * directory is created with its first row. */
+  private final class ParquetFiles(name: String, schema: StructType) {
+    private val conf = new Configuration(false)
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(e => conf.set(e.key, SQLConf.get.getConf(e).toString))
+    ParquetWriteSupport.setSchema(StructType(schema.fields.map(_.copy(nullable = true))), conf)
+    private val temp = s".$name.${TaskContext.get().taskAttemptId()}.tmp"
+    private val writers = mutable.LinkedHashMap.empty[Path, (ParquetWriter[InternalRow], Array[Long])]
+    TaskContext.get().addTaskFailureListener((_, _) => abort())
+    /** Rows of the files committed so far. */
+    var committed = 0L
+
+    def write(dir: Path, row: InternalRow): Unit = {
+      val (writer, rows) = writers.getOrElseUpdate(dir, (new RowWriterBuilder(
+        new LocalOutputFile(Files.createDirectories(dir).resolve(temp))).withConf(conf)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+        .withCompressionCodec(CompressionCodecName.SNAPPY).build(), Array(0L)))
+      writer.write(row)
+      rows(0) += 1
+    }
+
+    def commit(): Unit = writers.foreach { case (dir, (writer, rows)) =>
+      writer.close()
+      Files.move(dir.resolve(temp), dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      committed += rows(0)
+    }
+
+    def abort(): Unit = writers.foreach { case (dir, (writer, _)) =>
+      try writer.close() catch { case _: Exception => () }
+      Files.deleteIfExists(dir.resolve(temp))
+    }
+  }
+
+  private final class RowWriterBuilder(file: LocalOutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
   }
 }

@@ -20,7 +20,7 @@ import scala.jdk.CollectionConverters._
 
 /** End-to-end fan-out semantics (test_lambda_function.py:167-260 +
   * §2a error-semantics): ES gets the pruned projection, Splunk the full
-  * record, both from one persisted batch; toggle skips Splunk; metrics
+  * record, both from one pass over the batch; toggle skips Splunk; metrics
   * count success/total; ES `_id` is idempotent across redelivery; Splunk
   * chunks are ≤ maxBatchSize.
   */
@@ -199,6 +199,7 @@ class StreamingFanOutSpec extends AnyFunSuite {
     assert(spark.read.json(s"$splunkDir/*.jsonl").count() == 3)
     assert(spark.read.parquet(dlqDir).select("raw_payload").as[String].collect().toSeq ==
       Seq(poison))
+    assert(metrics.deadLettered.value == 1, metrics.summary)
   }
 
   /** What `body` starts on the context: each job's properties, each SQL
@@ -234,7 +235,7 @@ class StreamingFanOutSpec extends AnyFunSuite {
     rec
   }
 
-  test("raw fan-out job shape: no shuffle, at most 3 jobs, one cached copy, released when a sink throws") {
+  test("raw fan-out job shape: one job, no shuffle, nothing cached, the caller's job group") {
     import spark.implicits._
     val sc = spark.sparkContext
     // batches in 2 partitions, as two shards would deliver them
@@ -248,7 +249,7 @@ class StreamingFanOutSpec extends AnyFunSuite {
     def settled(): Unit = {
       bridge.drain(sc)
       assert(sc.statusTracker.getActiveJobIds.isEmpty, "a sink job outlived the call")
-      assert(sc.getPersistentRDDs.size == persistedBefore, "the batch is still cached")
+      assert(sc.getPersistentRDDs.size == persistedBefore, "the call left an RDD persisted")
     }
 
     sc.setJobGroup("fan-out-shape", "job shape")
@@ -259,22 +260,21 @@ class StreamingFanOutSpec extends AnyFunSuite {
       val dirtyRun = recording(run(dirty, tmp("es"), tmp("splunk")))
       settled()
 
-      assert(cleanRun.jobProps.size == 2, s"${cleanRun.jobProps.size} jobs on a clean batch")
-      assert(!cleanRun.plans.asScala.exists(_.contains("CollectLimit")),
-        "a clean batch needs no emptiness probe")
-      assert(dirtyRun.jobProps.size == 3, s"${dirtyRun.jobProps.size} jobs on a batch with poison")
+      assert(cleanRun.jobProps.size == 1, s"${cleanRun.jobProps.size} jobs on a clean batch")
+      assert(dirtyRun.jobProps.size == 1, s"${dirtyRun.jobProps.size} jobs on a batch with poison")
       for (r <- Seq(cleanRun, dirtyRun)) {
         assert(r.shuffleBytes.get == 0, "no stage may shuffle the batch")
-        assert(r.cachedRdds.size <= 1, s"persisted RDDs in the stages: ${r.cachedRdds}")
+        assert(r.cachedRdds.isEmpty, s"persisted RDDs in the stages: ${r.cachedRdds}")
+        assert(!r.plans.asScala.exists(_.contains("InsertIntoHadoopFsRelationCommand")),
+          "no sink goes through Spark's file committer")
         for (p <- r.jobProps.asScala) {
           assert(p.getProperty("spark.jobGroup.id") == "fan-out-shape")
           assert(p.getProperty("graft.test.caller") == "shape")
         }
       }
 
-      // a sink that throws before any job (ES dir is a regular file) and
-      // one whose directory Splunk cannot create: the other sink still
-      // runs to its end, the failure surfaces, the cache is released
+      // a sink directory that is a regular file fails the call on the
+      // driver, before the job
       val file = Files.createTempFile("not-a-dir", ".txt").toString
       intercept[Exception](run(clean, file, tmp("splunk")))
       settled()
@@ -290,32 +290,113 @@ class StreamingFanOutSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val signaler: Signaler = ThreadSignaler
     val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
-    // the write's tasks put their files under `_temporary/0/_temporary`:
-    // a regular file there fails each task, so the job fails after the
-    // transport marker was written and after the job was set up
-    Files.createDirectories(Paths.get(esDir, "_temporary", "0"))
-    Files.createFile(Paths.get(esDir, "_temporary", "0", "_temporary"))
+    // a regular file where the records' day directory goes: the ES writer
+    // cannot open its index file, inside the job, after the transport
+    // marker was written
+    Files.createFile(Paths.get(esDir, "index_date=2026-02-18"))
     val metrics = SinkMetrics(spark)
     val poison = b64("this is not json at all")
     val raw = ((1 to 6).map(i => b64(recJson(i))) :+ poison).toDF("data")
 
-    val err = new java.io.ByteArrayOutputStream
-    val stderr = System.err
-    System.setErr(new java.io.PrintStream(err, true))
-    try failAfter(Span(60, Seconds)) {
+    val err = captureErr(failAfter(Span(60, Seconds)) {
       StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, dlqDir,
         PipelineConfig(), metrics)
-    } finally System.setErr(stderr)
+    })
 
-    assert(err.toString.contains("[es-sink] bulk write failed"), "the ES failure is logged")
+    assert(err.contains("[es-sink] bulk write failed"), "the ES failure is logged")
     assert(Sinks.readTransportMeta(esDir).contains("auth_mode"))
-    assert(metrics.esSuccess.value == 0, metrics.summary)
+    assert(metrics.esSuccess.value == 0 && metrics.esTotal.value == 6, metrics.summary)
     assert(spark.read.json(s"$splunkDir/*.jsonl").count() == 6)
     assert(metrics.splunkSuccess.value == 6 && metrics.splunkTotal.value == 6, metrics.summary)
     assert(Files.list(Paths.get(dlqDir)).iterator().asScala
       .exists(_.getFileName.toString.startsWith("dl_batch=")), "the poison was not quarantined")
     assert(spark.read.parquet(dlqDir).select("raw_payload").as[String].collect().toSeq ==
       Seq(poison))
+  }
+
+  /** What `body` prints to stderr (the sinks' log), printed on as well. */
+  private def captureErr(body: => Unit): String = {
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try body finally System.setErr(stderr)
+    stderr.print(err.toString)
+    err.toString
+  }
+
+  test("a malformed datetime is quarantined, never fails the batch") {
+    import spark.implicits._
+    val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
+    val metrics = SinkMetrics(spark)
+    val bad = b64("""{"datetime":"not-a-date","random_id":"id-bad"}""")
+    val raw = ((1 to 5).map(i => b64(recJson(i))) :+ bad).toDF("data")
+    StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, dlqDir,
+      PipelineConfig(), metrics)
+
+    assert(Sinks.readEsIndex(spark, esDir).count() == 5)
+    assert(spark.read.json(s"$splunkDir/*.jsonl").count() == 5)
+    assert(spark.read.parquet(dlqDir).select("raw_payload").as[String].collect().toSeq ==
+      Seq(bad))
+    assert(metrics.esSuccess.value == 5 && metrics.esTotal.value == 5, metrics.summary)
+  }
+
+  test("without a DLQ a malformed datetime is a failed ES action, logged") {
+    import spark.implicits._
+    val (esDir, splunkDir) = (tmp("es"), tmp("splunk"))
+    val metrics = SinkMetrics(spark)
+    val batch = graft.pipeline.AuditPipeline.decodeKinesis(
+      ((1 to 3).map(i => b64(recJson(i))) :+
+        b64("""{"datetime":"not-a-date","random_id":"id-bad"}""")).toDF("data"), "data")
+    val err = captureErr(
+      StreamingFanOut.processBatch(batch, esDir, splunkDir, PipelineConfig(), metrics))
+
+    assert(err.contains("id-bad"), "the dropped action is logged")
+    assert(metrics.esTotal.value == 4 && metrics.esSuccess.value == 3, metrics.summary)
+    assert(Sinks.readEsIndex(spark, esDir).count() == 3)
+    assert(metrics.splunkSuccess.value == 4, "Splunk needs no date")
+  }
+
+  /** Files a reader of each sink sees, by suffix, under `dir`. */
+  private def files(dir: String, suffix: String): Int =
+    if (!Files.exists(Paths.get(dir))) 0
+    else Files.walk(Paths.get(dir)).iterator().asScala.count { p =>
+      val name = p.getFileName.toString
+      name.endsWith(suffix) && !name.startsWith(".")
+    }
+
+  test("a replayed epoch replaces its own files in every sink") {
+    import spark.implicits._
+    val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
+    val metrics = SinkMetrics(spark)
+    val poison = Seq(b64("not json"), b64("""{"kind_id": 1}"""))
+    val raw = spark.sparkContext.parallelize(
+      (1 to 12).map(i => b64(recJson(i))) ++ poison, 3).toDF("data")
+    def state() = (Sinks.readEsIndex(spark, esDir).count(),
+      spark.read.text(splunkDir).count(),
+      spark.read.parquet(dlqDir).select("raw_payload").as[String].collect().sorted.toSeq,
+      files(esDir, ".parquet"), files(splunkDir, ".jsonl"), files(dlqDir, ".parquet"))
+
+    StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, dlqDir,
+      PipelineConfig(), metrics, batchId = 7)
+    val first = state()
+    StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, dlqDir,
+      PipelineConfig(), metrics, batchId = 7)
+    assert(state() == first)
+    assert(first._1 == 12 && first._2 == 12 && first._3 == poison.sorted)
+    assert(metrics.deadLettered.value == 4, "each pass counts what it quarantined")
+  }
+
+  test("a hidden (unfinished) file is invisible to the ES index and DLQ reads") {
+    import spark.implicits._
+    val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
+    val raw = Seq(b64(recJson(1)), b64("not json")).toDF("data")
+    StreamingFanOut.processRawBatch(raw, "data", esDir, splunkDir, dlqDir,
+      PipelineConfig(), SinkMetrics(spark), batchId = 1)
+    // a torn write: half a parquet file under the writers' temp name
+    for (d <- Seq(Paths.get(esDir, "index_date=2026-02-18"), Paths.get(dlqDir, "dl_batch=b000001")))
+      Files.write(d.resolve(".part-b000002-00000.parquet.9.tmp"), "PAR1 torn".getBytes)
+    assert(Sinks.readEsIndex(spark, esDir).count() == 1)
+    assert(spark.read.parquet(dlqDir).count() == 1)
   }
 
   test("dead-letter write is idempotent per batch tag (foreachBatch retry semantics)") {
