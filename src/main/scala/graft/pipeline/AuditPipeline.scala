@@ -118,12 +118,16 @@ object AuditPipeline {
   def partitionValid(decodedWithRaw: DataFrame): (DataFrame, DataFrame) =
     (decodedWithRaw.filter(isValidRecord), decodedWithRaw.filter(!isValidRecord))
 
+  /** A record's day, the daily index it routes to (lambda_function.py:80);
+    * null when `datetime` is missing or does not parse, never an error
+    * whatever the ANSI mode. */
+  val day: Column = try_to_date(col("datetime"))
+
   /** A record carries the two fields the reference reads unconditionally
-    * (`datetime`, `random_id`, lambda_function.py:80-81), and its
-    * `datetime` parses as a date: the daily index is routed on it
-    * (lambda_function.py:80), so a malformed one is quarantined instead of
-    * failing its batch. */
-  val isValidRecord: Column = col("random_id").isNotNull && try_to_date(col("datetime")).isNotNull
+    * (`datetime`, `random_id`, lambda_function.py:80-81), and it has a
+    * [[day]] to route to, so a malformed `datetime` is quarantined instead
+    * of failing its batch. */
+  val isValidRecord: Column = col("random_id").isNotNull && day.isNotNull
 
   /** decodeKinesis, but keeps the raw payload column for dead-lettering. */
   def decodeKinesisWithRaw(df: DataFrame, dataCol: String): DataFrame =

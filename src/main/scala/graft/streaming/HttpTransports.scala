@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{ByteArrayOutputStream, InputStream}
+import java.io.InputStream
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
@@ -32,13 +32,7 @@ import java.nio.charset.StandardCharsets
   */
 object HttpTransports {
 
-  private[graft] def readAll(in: InputStream): Array[Byte] = {
-    val buf = new ByteArrayOutputStream()
-    val tmp = new Array[Byte](8192)
-    var n = in.read(tmp)
-    while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-    buf.toByteArray
-  }
+  private[graft] def readAll(in: InputStream): Array[Byte] = in.readAllBytes()
 
   private[graft] def post(url: String, body: Array[Byte],
       timeoutMillis: Int, headers: Seq[(String, String)]): (Int, Array[Byte]) = {

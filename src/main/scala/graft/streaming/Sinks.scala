@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import scala.collection.mutable
 
+import graft.pipeline.AuditPipeline
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
@@ -14,8 +15,9 @@ import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
@@ -55,8 +57,9 @@ object SinkMetrics {
   * <splunk>/post-<tag>-<task>-<chunk>.jsonl
   * <dlq>/dl_batch=<tag>/part-<task>.parquet   (column raw_payload)
   * }}}
-  * so a replayed epoch replaces its own files. A task writes its parquet
-  * files itself (Spark's `ParquetWriteSupport` on parquet-java's
+  * so a replayed epoch replaces its own files (a streaming batch's tag
+  * holds its query id: other lineages' files stay). A task writes its
+  * parquet files itself (Spark's `ParquetWriteSupport` on parquet-java's
   * `LocalOutputFile`) under a hidden name renamed into place when complete,
   * so readers never see a torn file. Spark's file committer cost more than
   * a live trigger's rows: on 4 vCPU a 400-row ES write in 4 tasks forked 22
@@ -92,18 +95,6 @@ object Sinks {
   def readEsIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).dropDuplicates("_id")
 
-  /** A record's day, the ES routing key; null when `datetime` is missing
-    * or does not parse (never an error, whatever the ANSI mode). */
-  private val day: Column = try_to_date(col("datetime")).cast("string")
-
-  /** The ES writer's columns of a pass: `_es`, the bulk action of each row
-    * where `keep` holds — `pruned`'s columns, `_index = prefix + day` and
-    * `_id = random_id` (lambda_function.py:80-81) — and `_day`, its day. */
-  private[streaming] def esColumns(pruned: DataFrame, prefix: String, keep: Column): Seq[Column] =
-    Seq(when(keep, struct(pruned.columns.toIndexedSeq.map(col) :+
-        concat(lit(prefix), day).as("_index") :+ col("random_id").as("_id"): _*)).as("_es"),
-      day.as("_day"))
-
   /** The OpenSearch HTTP boundary: one bulk round-trip. Given a chunk's doc
     * `_id`s, return the subset that FAILED this attempt (the per-document
     * rejections a real bulk response itemizes, e.g. 429s); a real client is
@@ -130,8 +121,8 @@ object Sinks {
   def writeEsBulk(pruned: DataFrame, dir: String, prefix: String, m: SinkMetrics,
       transport: BulkTransport, maxRetries: Int = 3, chunkSize: Int = 500): Long = {
     Files.createDirectories(Paths.get(dir))
-    deliver(pruned.select(esColumns(pruned, prefix, col("random_id").isNotNull): _*),
-      Seq(EsBulk(dir, randomTag(), m, transport, maxRetries, chunkSize))).head
+    deliver(pruned, Seq(new EsBulk(pruned, prefix, col("random_id").isNotNull, dir,
+      randomTag(), m, transport, maxRetries, chunkSize))).head
   }
 
   /** Dead-letter sink: quarantine rows that failed decode/validation with
@@ -139,19 +130,15 @@ object Sinks {
     * path — a malformed record crashes the whole batch and poisons
     * at-least-once redelivery forever (lambda_function.py:45,141); this is
     * the stricter option SURVEY §2a documents. Files are named by
-    * `batchTag` and task, so an epoch retry replaces its own rows. A task
-    * with nothing to quarantine opens no file: a clean epoch never touches
-    * retained rows, and the directory exists only once something was
-    * quarantined. Epoch tags key overwrites, so a DLQ directory belongs to
-    * ONE query's checkpoint lineage. Returns rows quarantined. */
+    * `batchTag` and task, so an epoch retry replaces its own rows; a tag
+    * must not be reused by another lineage. A task with nothing to
+    * quarantine opens no file, so the directory exists only once something
+    * was. Files are replaced one by one: a replay over FEWER tasks keeps the
+    * first attempt's extra `part-<task>` files, quarantining those payloads
+    * twice. Returns rows quarantined. */
   def writeDeadLetter(dead: DataFrame, dir: String, batchTag: String,
       rawCol: String = "_raw"): Long =
-    deliver(dead.select(deadColumn(lit(true), rawCol)), Seq(DeadLetter(dir, batchTag))).head
-
-  /** The dead-letter writer's column of a pass: `_dead`, the raw payload
-    * of each row where `quarantine` holds. */
-  private[streaming] def deadColumn(quarantine: Column, rawCol: String): Column =
-    when(quarantine, struct(col(rawCol).as("raw_payload"))).as("_dead")
+    deliver(dead, Seq(new DeadLetter(lit(true), rawCol, dir, batchTag))).head
 
   /** The Splunk HEC HTTP boundary: one POST of ≤maxBatchSize envelope lines
     * (lambda_function.py:90-102: `requests.post(hec_url, …, timeout=12)`).
@@ -179,9 +166,8 @@ object Sinks {
   /** Splunk HEC simulator (lambda_function.py:90-102,115-134): every record
     * in the HEC envelope {"event":…, "sourcetype":"json", "index":…}, each
     * task's lines posted in chunks of ≤500, one post = one JSON-lines file. */
-  def writeSplunk(full: DataFrame, dir: String, index: String,
-      m: SinkMetrics, maxBatchSize: Int = 500,
-      postTag: String = randomTag()): Unit =
+  def writeSplunk(full: DataFrame, dir: String, index: String, m: SinkMetrics,
+      maxBatchSize: Int = 500, postTag: String = randomTag()): Unit =
     writeSplunkVia(full.select(hecLine(full, index)), JsonlFileHec(dir, postTag), m, maxBatchSize)
 
   /** Each record of `full` in the HEC envelope, as one string column. */
@@ -195,27 +181,32 @@ object Sinks {
     * at-most-once drop of a failed post do not depend on the transport. */
   def writeSplunkVia(lines: DataFrame, transport: HecTransport,
       m: SinkMetrics, maxBatchSize: Int = 500): Unit =
-    deliver(lines.select(col(lines.columns.head).as("_line")),
-      Seq(Hec(transport, maxBatchSize, m)))
+    deliver(lines, Seq(new Hec(col(lines.columns.head), transport, maxBatchSize, m)))
 
   private[streaming] def randomTag(): String = java.util.UUID.randomUUID().toString.take(8)
 
-  /** One delivery pass over `rows`, which carry the columns `writers` read:
-    * a single job in which each task reads its partition once and feeds
-    * every writer. Returns what each writer delivered, in order. */
+  /** One delivery pass over `rows`: a single job in which each task reads
+    * its partition of the writers' columns once and feeds every writer.
+    * Its tasks see the session's SQL confs, as a SQL execution's would.
+    * Returns what each writer delivered, in order. */
   private[streaming] def deliver(rows: DataFrame, writers: Seq[Writer]): Seq[Long] = {
-    val schema = rows.schema
-    val perTask = rows.sparkSession.sparkContext.runJob(rows.queryExecution.toRdd,
-      (ctx: TaskContext, it: Iterator[InternalRow]) => {
-        val open = writers.map(_.open(ctx, schema))
-        it.foreach(r => open.foreach(_.add(r)))
-        open.map(_.close())
-      })
+    val input = rows.select(writers.flatMap(_.columns): _*)
+    val schema = input.schema
+    val perTask = bridge.withSqlConfPropagated(rows.sparkSession)(
+      rows.sparkSession.sparkContext.runJob(input.queryExecution.toRdd,
+        (ctx: TaskContext, it: Iterator[InternalRow]) => {
+          val open = writers.map(_.open(ctx, schema))
+          it.foreach(r => open.foreach(_.add(r)))
+          open.map(_.close())
+        }))
     writers.indices.map(i => perTask.map(_(i)).sum)
   }
 
-  /** A writer of a delivery pass; `open` gives its side in one task. */
+  /** A writer of a delivery pass: `columns`, built on the driver over the
+    * pass's rows, are what it reads (by their names); `open` gives its side
+    * in one task. */
   private[streaming] sealed trait Writer extends Serializable {
+    def columns: Seq[Column]
     def open(ctx: TaskContext, schema: StructType): TaskWriter
   }
 
@@ -224,12 +215,21 @@ object Sinks {
     def close(): Long // what the task delivered
   }
 
-  /** The ES writer (see [[writeEsBulk]]): reads `_es` and `_day`, writes
-    * each day's accepted documents to `index_date=<day>/part-<tag>-<task>`.
+  /** The ES writer (see [[writeEsBulk]]) of each row where `keep` holds:
+    * its bulk action `_es` — `pruned`'s columns, `_index = prefix + day`
+    * and `_id = random_id` (lambda_function.py:80-81) — and `_day`. Each
+    * day's accepted documents go to `index_date=<day>/part-<tag>-<task>`.
     * The first file error is logged and ends the task's ES delivery. */
-  private[streaming] final case class EsBulk(dir: String, tag: String, m: SinkMetrics,
-      transport: BulkTransport = acceptAllBulk, maxRetries: Int = 3, chunkSize: Int = 500)
-      extends Writer {
+  private[streaming] final class EsBulk(pruned: DataFrame, prefix: String, keep: Column,
+      dir: String, tag: String, m: SinkMetrics, transport: BulkTransport = acceptAllBulk,
+      maxRetries: Int = 3, chunkSize: Int = 500) extends Writer {
+    @transient val columns: Seq[Column] = {
+      val day = AuditPipeline.day.cast("string")
+      Seq(when(keep, struct(pruned.columns.toIndexedSeq.map(col) :+
+          concat(lit(prefix), day).as("_index") :+ col("random_id").as("_id"): _*)).as("_es"),
+        day.as("_day"))
+    }
+
     def open(ctx: TaskContext, schema: StructType): TaskWriter = new TaskWriter {
       private val docAt = schema.fieldIndex("_es")
       private val dayAt = schema.fieldIndex("_day")
@@ -296,10 +296,12 @@ object Sinks {
     }
   }
 
-  /** The Splunk writer (see [[writeSplunkVia]]): reads `_line`, posts each
-    * task's lines in chunks of ≤`maxBatchSize`. Delivers no count. */
-  private[streaming] final case class Hec(transport: HecTransport, maxBatchSize: Int,
+  /** The Splunk writer (see [[writeSplunkVia]]) of `line`, none where null:
+    * posts each task's lines in chunks of ≤`maxBatchSize`. Counts nothing. */
+  private[streaming] final class Hec(line: Column, transport: HecTransport, maxBatchSize: Int,
       m: SinkMetrics) extends Writer {
+    @transient val columns: Seq[Column] = Seq(line.as("_line"))
+
     def open(ctx: TaskContext, schema: StructType): TaskWriter = new TaskWriter {
       private val lineAt = schema.fieldIndex("_line")
       private val chunk = mutable.ArrayBuffer.empty[String]
@@ -328,10 +330,15 @@ object Sinks {
     }
   }
 
-  /** The dead-letter writer (see [[writeDeadLetter]]): reads `_dead`,
-    * writes `dl_batch=<tag>/part-<task>`. A failure here fails the pass:
+  /** The dead-letter writer (see [[writeDeadLetter]]) of the `rawCol`
+    * payload of each row where `quarantine` holds: writes
+    * `dl_batch=<tag>/part-<task>`. A failure here fails the pass:
     * quarantined rows are never dropped. */
-  private[streaming] final case class DeadLetter(dir: String, tag: String) extends Writer {
+  private[streaming] final class DeadLetter(quarantine: Column, rawCol: String,
+      dir: String, tag: String) extends Writer {
+    @transient val columns: Seq[Column] =
+      Seq(when(quarantine, struct(col(rawCol).as("raw_payload"))).as("_dead"))
+
     def open(ctx: TaskContext, schema: StructType): TaskWriter = new TaskWriter {
       private val deadAt = schema.fieldIndex("_dead")
       private val rowSchema = schema(deadAt).dataType.asInstanceOf[StructType]
@@ -347,13 +354,17 @@ object Sinks {
   /** A task's parquet files of one writer, one per directory, each named
     * `name`: written under a hidden temp name, renamed over `name`
     * atomically by [[commit]], deleted if the task fails first. A
-    * directory is created with its first row. */
+    * directory is created with its first row. Options and codec are the
+    * session's: [[deliver]] gives its tasks the session's SQL confs. */
   private final class ParquetFiles(name: String, schema: StructType) {
+    private val sql = SQLConf.get
     private val conf = new Configuration(false)
     Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
       SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
-      .foreach(e => conf.set(e.key, SQLConf.get.getConf(e).toString))
+      .foreach(e => conf.set(e.key, sql.getConf(e).toString))
     ParquetWriteSupport.setSchema(StructType(schema.fields.map(_.copy(nullable = true))), conf)
+    private val codec = CompressionCodecName.valueOf(
+      new ParquetOptions(Map.empty[String, String], sql).compressionCodecClassName)
     private val temp = s".$name.${TaskContext.get().taskAttemptId()}.tmp"
     private val writers = mutable.LinkedHashMap.empty[Path, (ParquetWriter[InternalRow], Array[Long])]
     TaskContext.get().addTaskFailureListener((_, _) => abort())
@@ -364,7 +375,7 @@ object Sinks {
       val (writer, rows) = writers.getOrElseUpdate(dir, (new RowWriterBuilder(
         new LocalOutputFile(Files.createDirectories(dir).resolve(temp))).withConf(conf)
         .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-        .withCompressionCodec(CompressionCodecName.SNAPPY).build(), Array(0L)))
+        .withCompressionCodec(codec).build(), Array(0L)))
       writer.write(row)
       rows(0) += 1
     }

@@ -3,7 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import graft.pipeline.AuditPipeline
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions.{col, concat, lit, when}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,10 +25,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Nothing is persisted and no sink waits for another. Delivery semantics
   * as §2a: the checkpoint redelivers at least once on restart, and a
   * replayed epoch writes the same file names (batch tag, task, day), so it
-  * replaces its own files. ES: bulk requests of ≤500 actions, rejections
-  * re-sent alone up to 3 times, then logged and dropped; idempotent via
-  * `_id`. Splunk: at-most-once per chunk. Dead-letter: every quarantined
-  * row is written, or the batch fails.
+  * replaces its own files; the tag holds the query id, so a query on a
+  * fresh checkpoint never replaces another lineage's. ES: bulk requests of
+  * ≤500 actions, rejections re-sent alone up to 3 times, then logged and
+  * dropped; idempotent via `_id`. Splunk: at-most-once per chunk.
+  * Dead-letter: every quarantined row is written, or the batch fails.
   */
 object StreamingFanOut {
 
@@ -37,13 +39,16 @@ object StreamingFanOut {
     * delivered; one without a parseable `datetime` has no daily index and
     * is a failed (logged) ES action. */
   def processBatch(batch: DataFrame, esDir: String, splunkDir: String,
-      config: PipelineConfig, metrics: SinkMetrics,
-      batchId: Long = -1L): Unit =
+      config: PipelineConfig, metrics: SinkMetrics, batchId: Long = -1L): Unit =
     fanOut(batch, None, esDir, splunkDir, config, metrics, batchId)(
       Sinks.hecLine(_, config.splunkIndex))
 
-  private def batchTag(batchId: Long): String =
-    if (batchId >= 0) f"b$batchId%06d" else Sinks.randomTag()
+  /** `b<batchId>` after the id of the query running it (kept by its
+    * checkpoint across restarts), if any; random without a batch id. */
+  private def batchTag(spark: SparkSession, batchId: Long): String =
+    if (batchId < 0) Sinks.randomTag()
+    else Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY))
+      .fold("")(_ + "-") + f"b$batchId%06d"
 
   /** The one fan-out body: each enriched row of `decoded` goes to ES as its
     * allowlist projection and to Splunk as `line` (none where null); with a
@@ -52,19 +57,19 @@ object StreamingFanOut {
   private def fanOut(decoded: DataFrame, deadLetter: Option[(String, String)],
       esDir: String, splunkDir: String, config: PipelineConfig, metrics: SinkMetrics,
       batchId: Long)(line: DataFrame => Column): Unit = {
-    val tag = batchTag(batchId)
+    val tag = batchTag(decoded.sparkSession, batchId)
     val rows = AuditPipeline.enrich(decoded)
     val ok = if (deadLetter.isEmpty) col("random_id").isNotNull else AuditPipeline.isValidRecord
     Sinks.writeTransportMeta(esDir, config.esAuthMode)
+    val es = new Sinks.EsBulk(AuditPipeline.filterForEs(rows), config.esIndexPrefix, ok,
+      esDir, tag, metrics)
     val splunk = if (config.splunkDisabled) None else {
       Files.createDirectories(Paths.get(splunkDir))
-      Some((Seq(when(ok, line(rows)).as("_line")),
-        Sinks.Hec(Sinks.JsonlFileHec(splunkDir, tag), config.maxBatchSize, metrics)))
+      Some(new Sinks.Hec(when(ok, line(rows)), Sinks.JsonlFileHec(splunkDir, tag),
+        config.maxBatchSize, metrics))
     }
-    val dead = deadLetter.map { case (dir, raw) => (Seq(Sinks.deadColumn(!ok, raw)), Sinks.DeadLetter(dir, tag)) }
-    val sinks = Seq((Sinks.esColumns(AuditPipeline.filterForEs(rows), config.esIndexPrefix, ok),
-      Sinks.EsBulk(esDir, tag, metrics))) ++ splunk ++ dead
-    val delivered = Sinks.deliver(rows.select(sinks.flatMap(_._1): _*), sinks.map(_._2))
+    val dead = deadLetter.map { case (dir, raw) => new Sinks.DeadLetter(!ok, raw, dir, tag) }
+    val delivered = Sinks.deliver(rows, Seq(es) ++ splunk ++ dead)
     if (dead.nonEmpty) metrics.deadLettered.add(delivered.last)
   }
 
@@ -77,8 +82,7 @@ object StreamingFanOut {
     * operator can inspect and re-ingest it. */
   def processRawBatch(rawBatch: DataFrame, dataCol: String,
       esDir: String, splunkDir: String, deadLetterDir: String,
-      config: PipelineConfig, metrics: SinkMetrics,
-      batchId: Long = -1L): Unit =
+      config: PipelineConfig, metrics: SinkMetrics, batchId: Long = -1L): Unit =
     fanOut(AuditPipeline.decodeKinesisWithRaw(rawBatch, dataCol), Some((deadLetterDir, "_raw")),
       esDir, splunkDir, config, metrics, batchId)(
       rows => Sinks.hecLine(rows.drop("_raw"), config.splunkIndex))
@@ -96,8 +100,7 @@ object StreamingFanOut {
     * removal applies only to the extracted/ES side here, because verbatim
     * payload preservation is worth more in the archive copy than
     * reproducing a lossy in-place mutation. */
-  def processBatchVariant(rawBatch: DataFrame, dataCol: String,
-      esDir: String, splunkDir: String,
+  def processBatchVariant(rawBatch: DataFrame, dataCol: String, esDir: String, splunkDir: String,
       config: PipelineConfig, metrics: SinkMetrics,
       batchId: Long = -1L, deadLetterDir: Option[String] = None): Unit =
     // Lenient decode ONLY when a DLQ takes the invalid rows: without one,
@@ -115,12 +118,11 @@ object StreamingFanOut {
     * (use [[AuditPipeline.decodeKinesis]] upstream for raw base64 payloads). */
   def start(source: DataFrame, esDir: String, splunkDir: String, checkpointDir: String,
       config: PipelineConfig, metrics: SinkMetrics): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, esDir, splunkDir, config, metrics, batchId)
-      }
-      .start()
+    run(source, checkpointDir)(processBatch(_, esDir, splunkDir, config, metrics, _))
+
+  private def run(source: DataFrame, checkpointDir: String)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
+    source.writeStream.option("checkpointLocation", checkpointDir).foreachBatch(batch).start()
 
   /** Start the full reference pipeline over the REAL Kinesis wire
     * protocol: the [[graft.sources.KinesisMicroBatchSource]] stream
@@ -129,16 +131,13 @@ object StreamingFanOut {
     * contract (lambda_function.py:140-141: Kinesis re-invokes the Lambda
     * per poll batch, redelivering unacknowledged records) carried by
     * Spark's own checkpoint/replay machinery. */
-  def startKinesis(spark: org.apache.spark.sql.SparkSession,
-      endpoint: String, streamName: String,
+  def startKinesis(spark: SparkSession, endpoint: String, streamName: String,
       esDir: String, splunkDir: String, deadLetterDir: String,
       checkpointDir: String, config: PipelineConfig, metrics: SinkMetrics,
-      limitPerPoll: Int = 500, maxPollsPerShard: Int = 100): StreamingQuery = {
-    val raw = graft.sources.KinesisMicroBatchSource
-      .readStream(spark, endpoint, streamName, limitPerPoll, maxPollsPerShard)
-    startRaw(raw, "data", esDir, splunkDir, deadLetterDir, checkpointDir,
+      limitPerPoll: Int = 500, maxPollsPerShard: Int = 100): StreamingQuery =
+    startRaw(graft.sources.KinesisMicroBatchSource.readStream(spark, endpoint, streamName,
+      limitPerPoll, maxPollsPerShard), "data", esDir, splunkDir, deadLetterDir, checkpointDir,
       config, metrics)
-  }
 
   /** Start the streaming query over a RAW base64-payload stream, with the
     * dead-letter quarantine live: every micro-batch runs
@@ -146,13 +145,7 @@ object StreamingFanOut {
     * (with raw payload, replayable) while valid rows reach both sinks. */
   def startRaw(rawSource: DataFrame, dataCol: String,
       esDir: String, splunkDir: String, deadLetterDir: String,
-      checkpointDir: String, config: PipelineConfig,
-      metrics: SinkMetrics): StreamingQuery =
-    rawSource.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processRawBatch(batch, dataCol, esDir, splunkDir, deadLetterDir,
-          config, metrics, batchId)
-      }
-      .start()
+      checkpointDir: String, config: PipelineConfig, metrics: SinkMetrics): StreamingQuery =
+    run(rawSource, checkpointDir)(
+      processRawBatch(_, dataCol, esDir, splunkDir, deadLetterDir, config, metrics, _))
 }

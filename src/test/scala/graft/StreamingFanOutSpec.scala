@@ -386,6 +386,55 @@ class StreamingFanOutSpec extends AnyFunSuite {
     assert(metrics.deadLettered.value == 4, "each pass counts what it quarantined")
   }
 
+  test("queries on different checkpoints share the sink dirs without replacing each other's files") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
+    // both lineages start at batch 0 and deliver in one task each, so
+    // without a lineage in the tag their files would have the same names
+    val poison = Seq(b64("not json"), b64("""{"kind_id": 7}"""))
+    for ((ids, bad) <- Seq((1 to 3, poison(0)), (4 to 6, poison(1)))) {
+      val stream = MemoryStream[String]
+      val q = StreamingFanOut.startRaw(stream.toDF().withColumnRenamed("value", "data"), "data",
+        esDir, splunkDir, dlqDir, tmp("ckpt"), PipelineConfig(), SinkMetrics(spark))
+      stream.addData(ids.map(i => b64(recJson(i))) :+ bad: _*)
+      q.processAllAvailable()
+      q.stop()
+    }
+
+    assert(Sinks.readEsIndex(spark, esDir).select("_id").as[String].collect().sorted.toSeq ==
+      (1 to 6).map(i => s"id-$i"))
+    assert(spark.read.text(splunkDir).count() == 6)
+    assert(spark.read.parquet(dlqDir).select("raw_payload").as[String].collect().sorted.toSeq ==
+      poison.sorted)
+  }
+
+  test("the simulators' parquet files follow the caller's session write settings") {
+    val session = spark.newSession()
+    import session.implicits._
+    session.conf.set("spark.sql.parquet.compression.codec", "gzip")
+    session.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    val (esDir, dlqDir) = (tmp("es"), tmp("dlq"))
+    val docs = Seq(("id-1", "2026-02-18T10:00:00")).toDF("random_id", "datetime")
+      .withColumn("ts", to_timestamp(col("datetime")))
+    assert(Sinks.writeEsBulk(docs, esDir, "audit-", SinkMetrics(session), Sinks.acceptAllBulk) == 1)
+    assert(Sinks.writeDeadLetter(Seq("p1").toDF("_raw"), dlqDir, "b000001") == 1)
+
+    def footer(dir: String) = {
+      val file = Files.walk(Paths.get(dir)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      assert(file.size == 1, file)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(file.head))
+      try reader.getFooter finally reader.close()
+    }
+    for (dir <- Seq(esDir, dlqDir))
+      assert(footer(dir).getBlocks.asScala.flatMap(_.getColumns.asScala).map(_.getCodec).toSet ==
+        Set(org.apache.parquet.hadoop.metadata.CompressionCodecName.GZIP))
+    val ts = footer(esDir).getFileMetaData.getSchema.getFields.asScala.find(_.getName == "ts")
+    assert(ts.exists(_.getLogicalTypeAnnotation.toString.contains("MILLIS")), ts)
+  }
+
   test("a hidden (unfinished) file is invisible to the ES index and DLQ reads") {
     import spark.implicits._
     val (esDir, splunkDir, dlqDir) = (tmp("es"), tmp("splunk"), tmp("dlq"))
