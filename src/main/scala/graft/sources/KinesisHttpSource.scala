@@ -48,6 +48,17 @@ final case class KinesisPage(records: Seq[KinesisRecord],
   }
 }
 
+/** A Kinesis error response: the operation, its HTTP status, and the
+  * service's error type from the body's `__type` (empty when the body
+  * carries none), e.g. `ExpiredIteratorException` for a shard iterator
+  * older than five minutes. */
+final class KinesisServiceException(val target: String, val status: Int, body: String)
+    extends java.io.IOException(s"Kinesis $target returned HTTP $status: ${body.take(200)}") {
+  val errorType: String =
+    scala.util.Try(new ObjectMapper().readTree(body).path("__type").asText(""))
+      .getOrElse("").split('#').last
+}
+
 /** Minimal client for the REAL Kinesis wire protocol — JSON over HTTP
   * with `X-Amz-Target: Kinesis_20131202.<Op>` and
   * `Content-Type: application/x-amz-json-1.1`, the exact frames boto3
@@ -99,8 +110,8 @@ final case class KinesisHttpClient(endpoint: String, timeoutMillis: Int = 12000,
     val (status, resp) = HttpTransports.post(endpoint,
       payload, timeoutMillis, baseHeaders ++ authHeaders)
     if (status < 200 || status >= 300)
-      throw new java.io.IOException(
-        s"Kinesis $target returned HTTP $status: ${new String(resp, StandardCharsets.UTF_8).take(200)}")
+      throw new KinesisServiceException(target, status,
+        new String(resp, StandardCharsets.UTF_8))
     mapper.readTree(resp)
   }
 
@@ -158,6 +169,14 @@ final case class KinesisHttpClient(endpoint: String, timeoutMillis: Int = 12000,
     require(it.nonEmpty, "GetShardIterator: empty iterator")
     it
   }
+
+  /** An iterator that starts right after `seq`, or at TRIM_HORIZON when
+    * the shard has no position yet (None). */
+  def iteratorAfter(streamName: String, shardId: String, seq: Option[String]): String =
+    seq match {
+      case Some(s) => getShardIterator(streamName, shardId, "AFTER_SEQUENCE_NUMBER", Some(s))
+      case None => getShardIterator(streamName, shardId, "TRIM_HORIZON")
+    }
 
   /** One GetRecords page with the service's tip-distance report. The
     * next iterator is None when the shard is closed/drained and the

@@ -35,21 +35,31 @@ import scala.jdk.CollectionConverters._
   *    Spark job (one task per shard, ≤ maxPollsPerShard pages of ≤
   *    limitPerPoll records each — the Lambda poll bound, so ReadLimit
   *    stays allAvailable); each task returns only its shard's last
-  *    sequence number, poll count and tip distance ([[ShardProbe]]), a
-  *    few dozen bytes. Record PAYLOADS are likewise
-  *    fetched on EXECUTORS, one `InputPartition` per shard, each opening
-  *    its own HTTP client and resuming with `AT_SEQUENCE_NUMBER`/
-  *    `AFTER_SEQUENCE_NUMBER` iterators. Shards are the parallelism
-  *    unit, exactly as in the Kinesis service model; a 1000-shard stream
-  *    fans out to 1000 parallel probes and 1000 parallel readers, and
-  *    per-trigger driver traffic is O(#shards × seq-number), never
-  *    O(stream bytes) — KinesisMicroBatchSpec proves on the loopback
-  *    server's wire log that no payload-bearing GetRecords ever carries
-  *    the driver origin marker. (GetRecords is the only tip-discovery
-  *    operation the Kinesis API offers, so the probe's page bodies are
-  *    still read once on the executors and discarded; production
-  *    connectors amortize that with prefetch caches, which changes
-  *    cost, not semantics.)
+  *    sequence number, poll count, tip distance, next shard iterator and
+  *    executor ([[ShardProbe]]), a few dozen bytes. Record PAYLOADS stay
+  *    on EXECUTORS, one `InputPartition` per shard. Shards are the
+  *    parallelism unit, exactly as in the Kinesis service model; a
+  *    1000-shard stream fans out to 1000 parallel probes and 1000
+  *    parallel readers, and per-trigger driver traffic is O(#shards ×
+  *    seq-number), never O(stream bytes) — KinesisMicroBatchSpec proves
+  *    on the loopback server's wire log that no payload-bearing
+  *    GetRecords ever carries the driver origin marker.
+  *  - **Each page crosses the wire once.** GetRecords is the only
+  *    tip-discovery operation the Kinesis API offers, so the probe must
+  *    read the pages anyway: it keeps them in its executor's
+  *    [[ProbePageStore]] (one byte bound, keyed by stream instance, shard
+  *    and start), and the reader of the same range takes them from there,
+  *    once, on that executor (`preferredLocations`). The reader goes to
+  *    the wire only for what the store does not hold — after a restart,
+  *    replay, eviction, overflow or a read on another executor — with an
+  *    `AFTER_SEQUENCE_NUMBER` iterator after the last record it emitted,
+  *    so the records of a range never depend on the store. The probe
+  *    also returns its last page's NextShardIterator; the next trigger's
+  *    probe of that shard continues on it when it starts at that tip, so
+  *    a steady query opens one iterator per shard, not two per shard per
+  *    trigger (Spark's kinesis-asl reads blocks already in the
+  *    BlockManager the same way, falling back to a sequence-number
+  *    range read).
   *  - **The probe stops at the page that reports the tip.** A page with
   *    `MillisBehindLatest: 0` proves the iterator reached the tip as of
   *    that read, records or not ([[KinesisPage.caughtUp]]), so the probe
@@ -111,51 +121,143 @@ object KinesisMicroBatchSource {
   }
 
   /** One shard's tip probe — runs INSIDE a Spark task (one per shard):
-    * pages GetRecords from the start position, retaining only the last
-    * sequence number seen. Page bodies are read and discarded here, on
-    * the executor; the task's result is a [[ShardProbe]] of a few dozen
-    * bytes. The probe stops at the first page that reports the tip
-    * ([[KinesisPage.caughtUp]]: `MillisBehindLatest` 0, records or not)
-    * and reports that page's last sequence number; an empty page with
-    * reported distance behind the tip keeps polling (within the poll
-    * budget) instead of under-advancing the offset. `drained` is true
-    * exactly when the service returned a null NextShardIterator, the
-    * wire signal that a CLOSED shard has been read to its
-    * EndingSequenceNumber (the parent-done fact the reshard lineage gate
-    * needs; a probe that stops on an at-tip page before that signal is
-    * matched against the listing's EndingSequenceNumber instead). */
+    * pages GetRecords from the start position, on `carried` (the previous
+    * probe's NextShardIterator, which continues right after `start`) when
+    * given, else on a fresh iterator after `start`. A carried iterator
+    * the service rejects as expired is replaced by a fresh one. The pages
+    * read go to this executor's [[ProbePageStore]] under
+    * (`instance`, shard, start) for the reader of that range; the task's
+    * result is a [[ShardProbe]] of a few dozen bytes. The probe stops at
+    * the first page that reports the tip ([[KinesisPage.caughtUp]]:
+    * `MillisBehindLatest` 0, records or not) and reports that page's
+    * last sequence number; an empty page with reported distance behind
+    * the tip keeps polling (within the poll budget) instead of
+    * under-advancing the offset. */
   private[sources] def probeShardTip(opts: Map[String, String],
-      streamName: String, shard: String, start: Option[String],
-      limitPerPoll: Int, maxPollsPerShard: Int): ShardProbe = {
+      streamName: String, instance: String, shard: String, start: Option[String],
+      carried: Option[String], limitPerPoll: Int, maxPollsPerShard: Int): ShardProbe = {
     val c = clientFor(opts)
+    def fresh() = c.getRecordsPage(c.iteratorAfter(streamName, shard, start), limitPerPoll)
+    def first() = carried.fold(fresh()) { it =>
+      try c.getRecordsPage(it, limitPerPoll)
+      catch { case e: KinesisServiceException if e.errorType == "ExpiredIteratorException" => fresh() }
+    }
+    val pages = List.newBuilder[IndexedSeq[KinesisRecord]]
+    var bytes = 0L
     var pos = start
-    var it: Option[String] = Some(start match {
-      case Some(seq) =>
-        c.getShardIterator(streamName, shard, "AFTER_SEQUENCE_NUMBER", Some(seq))
-      case None => c.getShardIterator(streamName, shard, "TRIM_HORIZON")
-    })
+    var it: Option[String] = None
     var polls = 0
     var caughtUp = false
     var behind: Option[Long] = None
-    while (it.isDefined && polls < maxPollsPerShard && !caughtUp) {
-      val page = c.getRecordsPage(it.get, limitPerPoll)
+    while ((polls == 0 || it.isDefined) && polls < maxPollsPerShard && !caughtUp) {
+      val page = if (polls == 0) first() else c.getRecordsPage(it.get, limitPerPoll)
+      if (page.records.nonEmpty && bytes <= ProbePageStore.MaxBytes) {
+        pages += page.records.toIndexedSeq
+        bytes += page.records.map(ProbePageStore.bytesOf).sum
+      }
       page.records.lastOption.foreach(r => pos = Some(r.sequenceNumber))
       caughtUp = page.caughtUp
       behind = page.millisBehindLatest
       it = page.nextIterator
       polls += 1
     }
-    ShardProbe(pos, it.isEmpty, polls, behind)
+    val stored = ProbePageStore.local.put((instance, shard, start), pages.result())
+    val bm = org.apache.spark.SparkEnv.get.blockManager.blockManagerId
+    // the task-location form Spark's scheduler reads as "this executor"
+    ShardProbe(start, pos, it, polls, behind, stored, s"executor_${bm.host}_${bm.executorId}")
   }
 }
 
-/** One shard's tip-probe result, returned by the probe task: the last
-  * sequence number seen (the start position when no record followed it;
-  * None for a shard that never carried one), whether the wire reported the shard closed and drained (null
-  * NextShardIterator), the GetRecords pages it took, and the last page's
-  * `MillisBehindLatest` (None when the service omits it). */
-final case class ShardProbe(tip: Option[String], drained: Boolean,
-    polls: Int, millisBehindLatest: Option[Long])
+/** One shard's tip-probe result, returned by the probe task: the start
+  * position it read after, the last sequence number seen (the start
+  * position when no record followed it; None for a shard that never
+  * carried one), the last page's
+  * NextShardIterator (None once the wire reported the shard closed and
+  * drained), the GetRecords pages it took, the last page's
+  * `MillisBehindLatest` (None when the service omits it), the records it
+  * kept in the [[ProbePageStore]], and the executor that holds them. */
+final case class ShardProbe(start: Option[String], tip: Option[String],
+    nextIterator: Option[String], polls: Int, millisBehindLatest: Option[Long],
+    stored: Int, executor: String) {
+  /** The wire's end-of-shard signal (a null NextShardIterator): a CLOSED
+    * shard read to its EndingSequenceNumber, the parent-done fact the
+    * reshard lineage gate needs. A probe that stops on an at-tip page
+    * before that signal is matched against the listing's
+    * EndingSequenceNumber instead. */
+  def drained: Boolean = nextIterator.isEmpty
+}
+
+/** The tip probe's pages, kept on its executor for the reader of the same
+  * range: one store per JVM, bounded by [[ProbePageStore.MaxBytes]] of
+  * estimated record heap. An entry is keyed by (stream instance, shard,
+  * start position), holds the pages the probe read after that start in
+  * wire order, and is taken once. A probe that reads more than the bound
+  * keeps only the prefix that fits, and older entries are evicted first
+  * to make room. Whatever is missing the reader fetches from the wire. */
+private[graft] final class ProbePageStore(maxBytes: Long) {
+  import ProbePageStore.{Entry, Key, bytesOf}
+  /** Insertion order is age: the head is the oldest entry. */
+  private val entries = new java.util.LinkedHashMap[Key, Entry]()
+  private var used = 0L
+
+  /** Keep `pages` under `key` (replacing an older entry for it), cut to
+    * the prefix that fits the bound; returns the records kept. */
+  def put(key: Key, pages: List[IndexedSeq[KinesisRecord]]): Int = synchronized {
+    Option(entries.remove(key)).foreach(e => used -= e.bytes)
+    val kept = List.newBuilder[IndexedSeq[KinesisRecord]]
+    var bytes = 0L
+    var records = 0
+    var full = false
+    for (page <- pages if !full) {
+      var n = 0
+      while (n < page.size && bytes + bytesOf(page(n)) <= maxBytes) {
+        bytes += bytesOf(page(n)); n += 1
+      }
+      if (n > 0) kept += page.take(n)
+      records += n
+      full = n < page.size
+    }
+    val entry = Entry(kept.result(), bytes)
+    if (entry.pages.nonEmpty) {
+      val it = entries.values.iterator
+      while (used + entry.bytes > maxBytes && it.hasNext) { used -= it.next().bytes; it.remove() }
+      entries.put(key, entry)
+      used += entry.bytes
+    }
+    records
+  }
+
+  /** Remove and return the pages kept under `key` (Nil when none). */
+  def take(key: Key): List[IndexedSeq[KinesisRecord]] = synchronized {
+    Option(entries.remove(key)).map { e => used -= e.bytes; e.pages }.getOrElse(Nil)
+  }
+
+  /** Drop every entry of one stream instance (a stopped stream). */
+  def dropInstance(instance: String): Unit = synchronized {
+    val it = entries.entrySet.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey._1 == instance) { used -= e.getValue.bytes; it.remove() }
+    }
+  }
+
+  def usedBytes: Long = synchronized(used)
+}
+
+private[graft] object ProbePageStore {
+  /** (stream instance, shard, start position exclusive). */
+  type Key = (String, String, Option[String])
+  private final case class Entry(pages: List[IndexedSeq[KinesisRecord]], bytes: Long)
+  /** The one bound on the pages a JVM keeps for readers. */
+  val MaxBytes: Long = 256L << 20
+  /** This JVM's store. */
+  val local = new ProbePageStore(MaxBytes)
+  /** Estimated heap of one record: its strings at one byte a character
+    * (base64 and sequence numbers are Latin-1) plus the headers of the
+    * record and its four strings. */
+  def bytesOf(r: KinesisRecord): Long =
+    160L + r.shardId.length + r.partitionKey.length + r.sequenceNumber.length + r.data.length
+}
 
 /** One shard's checkpointed position: the last processed sequence number
   * (None before the first record) plus the DONE fact — the shard is
@@ -232,14 +334,21 @@ object KinesisOffset {
 
 /** The micro-batch stream. As [[ReportsSourceMetrics]] it reports, per
   * shard probed by the latest `latestOffset`, that probe's GetRecords
-  * pages (`probePolls.<shardId>`) and its last page's MillisBehindLatest
+  * pages (`probePolls.<shardId>`), the records it kept for the reader
+  * (`storedRecords.<shardId>`, fewer than it read when the store's bound
+  * cut the prefix) and its last page's MillisBehindLatest
   * (`millisBehindLatest.<shardId>`, absent when the service omits it);
-  * they appear in `StreamingQueryProgress.sources(i).metrics`. */
+  * they appear in `StreamingQueryProgress.sources(i).metrics`. Each
+  * instance keys its probe pages by its own id, so a restarted query
+  * starts with an empty store. */
 final class KinesisMicroBatchStream(options: Map[String, String])
     extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
   private val streamName = options("streamname")
   private val limitPerPoll = options.getOrElse("limitperpoll", "500").toInt
   private val maxPollsPerShard = options.getOrElse("maxpollspershard", "100").toInt
+  // a probe that never polls would read as a drained shard
+  require(maxPollsPerShard >= 1, s"maxPollsPerShard must be >= 1, got $maxPollsPerShard")
+  private val instance = java.util.UUID.randomUUID().toString
   @transient private lazy val client = KinesisMicroBatchSource.clientFor(options)
   /** The latest trigger's probe results, by shard. */
   @volatile private var lastProbes: Map[String, ShardProbe] = Map.empty
@@ -256,13 +365,16 @@ final class KinesisMicroBatchStream(options: Map[String, String])
     * the first page that reports the tip (`MillisBehindLatest` 0, or an
     * empty page from a server that omits the field). Under a live
     * producer that is one or two pages per shard; what arrives after the
-    * read waits for the next trigger. Only sequence NUMBERS are
-    * retained; payloads are fetched on executors. Implementing
+    * read waits for the next trigger. The driver keeps only sequence
+    * NUMBERS, each probe's NextShardIterator (the next probe of the shard
+    * continues on it) and the executor that holds its pages; payloads stay
+    * on executors. Implementing
     * SupportsAdmissionControl is what makes the resume explicit: the
     * engine hands this method the checkpointed start, so a restarted
     * stream's FIRST wire call is already AFTER_SEQUENCE_NUMBER - never a
     * TRIM_HORIZON re-probe of history (KinesisMicroBatchSpec asserts
-    * that on the server's iterator-call log). */
+    * that on the server's iterator-call log); a new stream instance
+    * carries no iterator. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset =
     reportLatest(positionsOf(start))
 
@@ -292,6 +404,7 @@ final class KinesisMicroBatchStream(options: Map[String, String])
     * already-done shards are never probed again (their markers are
     * carried forward verbatim, zero wire calls). */
   private def reportLatest(start: Map[String, String]): Offset = {
+    val previous = lastProbes
     lastProbes = Map.empty
     val shards = client.listShards(streamName)
     if (shards.isEmpty) return KinesisOffset(Map.empty)
@@ -310,14 +423,18 @@ final class KinesisMicroBatchStream(options: Map[String, String])
     if (admissible.isEmpty) return KinesisOffset(carried)
     val spark = SparkSession.active
     // capture plain values only — the closure ships to executors
-    val (opts, sn, lpp, mpps) = (options, streamName, limitPerPoll, maxPollsPerShard)
+    val (opts, sn, inst, lpp, mpps) =
+      (options, streamName, instance, limitPerPoll, maxPollsPerShard)
     val closedEnd = admissible.map(sh => sh.shardId -> sh.endingSequenceNumber).toMap
-    val work = admissible.map(sh =>
-      (sh.shardId, startPos.get(sh.shardId).flatMap(_.seq)))
+    val work = admissible.map { sh =>
+      val st = startPos.get(sh.shardId).flatMap(_.seq)
+      // the previous probe's iterator continues right after its tip
+      (sh.shardId, st, previous.get(sh.shardId).filter(_.tip == st).flatMap(_.nextIterator))
+    }
     val probes = spark.sparkContext
       .parallelize(work, work.size)
-      .map { case (sh, st) =>
-        sh -> KinesisMicroBatchSource.probeShardTip(opts, sn, sh, st, lpp, mpps)
+      .map { case (sh, st, it) =>
+        sh -> KinesisMicroBatchSource.probeShardTip(opts, sn, inst, sh, st, it, lpp, mpps)
       }
       .collect()
       .toMap
@@ -336,13 +453,14 @@ final class KinesisMicroBatchStream(options: Map[String, String])
 
   override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] =
     lastProbes.toSeq.flatMap { case (sh, pr) =>
-      (s"probePolls.$sh" -> pr.polls.toString) +:
-        pr.millisBehindLatest.map(b => s"millisBehindLatest.$sh" -> b.toString).toSeq
+      Seq(s"probePolls.$sh" -> pr.polls.toString, s"storedRecords.$sh" -> pr.stored.toString) ++
+        pr.millisBehindLatest.map(b => s"millisBehindLatest.$sh" -> b.toString)
     }.toMap.asJava
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = positionsOf(start).view.mapValues(ShardPos.parse).toMap
     val e = positionsOf(end)
+    val probes = lastProbes
     e.toSeq.sortBy(_._1).flatMap { case (shard, endV) =>
       val endPos = ShardPos.parse(endV)
       val startSeq = s.get(shard).flatMap(_.seq)
@@ -350,10 +468,14 @@ final class KinesisMicroBatchStream(options: Map[String, String])
         case None => None // done-but-empty shard: nothing to read
         case Some(endSeq) if startSeq.contains(endSeq) => None // unchanged
         case Some(endSeq) =>
+          // the executor whose store holds this range's pages, if any
+          val holder = probes.get(shard)
+            .filter(pr => pr.start == startSeq && pr.stored > 0).map(_.executor)
           Some(KinesisInputPartition(options("endpoint"), streamName, shard,
             startSeq, endSeq, limitPerPoll,
             options.filter { case (k, _) =>
-              Set("region", "accesskeyid", "secretkey", "sessiontoken")(k) }))
+              Set("region", "accesskeyid", "secretkey", "sessiontoken")(k) },
+            instance, holder))
       }
     }.toArray[InputPartition]
   }
@@ -365,15 +487,20 @@ final class KinesisMicroBatchStream(options: Map[String, String])
     KinesisOffset.fromJson(json)
 
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  override def stop(): Unit = ProbePageStore.local.dropInstance(instance)
 }
 
 /** One shard's record range (startSeq, endSeq] — immutable because
-  * sequence numbers are monotone within a shard. Serialized to executors;
-  * each reader opens its own HTTP client. */
+  * sequence numbers are monotone within a shard. Serialized to executors.
+  * `instance` is the stream instance whose probe pages the reader looks
+  * for; `holder` is the executor that probed the range and keeps its
+  * pages, the partition's preferred location. */
 final case class KinesisInputPartition(endpoint: String, streamName: String,
     shardId: String, startSeqExclusive: Option[String], endSeqInclusive: String,
-    limitPerPoll: Int, authOpts: Map[String, String]) extends InputPartition
+    limitPerPoll: Int, authOpts: Map[String, String],
+    instance: String, holder: Option[String]) extends InputPartition {
+  override def preferredLocations(): Array[String] = holder.toArray
+}
 
 final class KinesisPartitionReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -385,16 +512,21 @@ object KinesisPartitionReader {
   private[sources] val MaxTransientEmptyPolls = 100000
 }
 
+/** Reads one partition's (startSeq, endSeq] range: first the pages its
+  * probe kept in this executor's [[ProbePageStore]] (taken once, each page
+  * dropped as it is consumed), then, if they end before `endSeq` or the
+  * store holds none, the wire from an iterator opened lazily after the
+  * last record emitted (at the start when nothing was stored). */
 final class KinesisPartitionReader(p: KinesisInputPartition)
     extends PartitionReader[InternalRow] {
-  private val client =
+  private lazy val client =
     KinesisMicroBatchSource.clientFor(p.authOpts + ("endpoint" -> p.endpoint))
   private val endSeq = BigInt(p.endSeqInclusive)
-  private var it: Option[String] = Some(p.startSeqExclusive match {
-    case Some(seq) => client.getShardIterator(p.streamName, p.shardId,
-      "AFTER_SEQUENCE_NUMBER", Some(seq))
-    case None => client.getShardIterator(p.streamName, p.shardId, "TRIM_HORIZON")
-  })
+  private var stored =
+    ProbePageStore.local.take((p.instance, p.shardId, p.startSeqExclusive)).iterator
+  /** The wire iterator: None until opened, and again once the shard ends. */
+  private var it: Option[String] = None
+  private var opened = false
   private var polls = 0
   private var transientEmpty = 0
   private var buffer: Iterator[KinesisRecord] = Iterator.empty
@@ -412,6 +544,12 @@ final class KinesisPartitionReader(p: KinesisInputPartition)
     // (both loud-failure cases below). A generous cap on CONSECUTIVE
     // transient-empty pages is kept purely as an infinite-loop backstop
     // against a pathological service.
+    while (!buffer.hasNext && stored.hasNext) buffer = stored.next().iterator
+    if (!buffer.hasNext && !opened) {
+      opened = true
+      it = Some(client.iteratorAfter(p.streamName, p.shardId,
+        Option(current).map(_.sequenceNumber).orElse(p.startSeqExclusive)))
+    }
     while (!buffer.hasNext && it.isDefined) {
       val page = client.getRecordsPage(it.get, p.limitPerPoll)
       buffer = page.records.iterator
@@ -440,7 +578,7 @@ final class KinesisPartitionReader(p: KinesisInputPartition)
         // emitting the checkpointed end: stop BEFORE fetching another page
         // (the range is complete; an extra poll would just see empty)
         if (seq == endSeq) finished = true
-        if (finished) { buffer = Iterator.empty }
+        if (finished) { buffer = Iterator.empty; stored = Iterator.empty }
         true
       }
     } else {

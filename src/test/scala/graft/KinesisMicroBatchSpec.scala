@@ -30,6 +30,12 @@ import scala.jdk.CollectionConverters._
   *    stops at the page that reports the tip (≤ 2 GetRecords per shard
   *    per trigger, also visible in the source metrics) instead of
   *    chasing the tip for the whole poll budget;
+  *  - each GetRecords page crosses the wire once: the reader takes the
+  *    probe's pages from the executor's page store, the next probe
+  *    continues on the previous probe's iterator (one GetShardIterator
+  *    per shard for a whole run), an expired iterator reopens after the
+  *    checkpointed tip, and a stored prefix that ends early is completed
+  *    from the wire;
   *  - end-to-end: `StreamingFanOut.startKinesis` drives the wire source
   *    through the dead-letter fan-out into both sinks, and a simulated
   *    crash-before-commit (newest commit-log entry removed) redelivers
@@ -65,6 +71,12 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     * read, as seen on the wire. */
   private val chainPages = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
   private val chains = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** (chain, shardId, position, records) per GetRecords page served. */
+  private val pagesServed = new ConcurrentLinkedQueue[(Int, String, Int, Int)]()
+  /** Chains whose next GetRecords the server rejects with HTTP 400
+    * `ExpiredIteratorException`, as Kinesis does after five minutes. */
+  private val expiredChains = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private val expiredRejections = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private var server: HttpServer = _
   private def endpoint: String = s"http://127.0.0.1:${server.getAddress.getPort}/"
@@ -119,11 +131,15 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
           val Array(_, shard, posS, chain) = body.path("ShardIterator").asText().split('|')
           val limit = body.path("Limit").asInt(500)
           val pos = posS.toInt
-          chainPages.merge(chain.toInt, 1, _ + _)
-          if (hiccups.getAndUpdate(n => math.max(0, n - 1)) > 0) {
+          if (expiredChains.contains(chain.toInt)) {
+            expiredRejections.incrementAndGet()
+            reply(400, """{"__type":"ExpiredIteratorException","message":"Iterator expired"}""")
+          } else if (hiccups.getAndUpdate(n => math.max(0, n - 1)) > 0) {
+            chainPages.merge(chain.toInt, 1, _ + _)
             // transient empty page: same-position iterator, still behind
             reply(200, s"""{"Records":[],"NextShardIterator":"it|$shard|$pos|$chain","MillisBehindLatest":5000}""")
           } else {
+            chainPages.merge(chain.toInt, 1, _ + _)
             val (recs, behind) = store(shard).synchronized {
               val r = store(shard).slice(pos, pos + limit).toIndexedSeq
               val b = math.max(0, store(shard).size - (pos + r.size)) * 1000L
@@ -133,6 +149,7 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
               }
               (r, b)
             }
+            pagesServed.add((chain.toInt, shard, pos, recs.size))
             val items = recs.zipWithIndex.map { case (d, i) =>
               s"""{"ShardId":"$shard","PartitionKey":"pk-${pos + i}","SequenceNumber":"${pos + i}","Data":"$d"}"""
             }.mkString(",")
@@ -215,6 +232,10 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"shard1 must resume after seq 2: ${iteratorCalls.asScala.toSeq}")
     assert(!iteratorCalls.asScala.exists(_._2 == "TRIM_HORIZON"),
       "a resumed stream must never fall back to TRIM_HORIZON")
+    // the restarted query's stream is a new instance: no iterator carried
+    // over, and its reader took the pages its own first probe stored
+    assert(iteratorCalls.size == 2,
+      s"one iterator per shard after restart: ${iteratorCalls.asScala.toSeq}")
   }
 
   test("per-trigger admission is bounded by limitPerPoll * maxPollsPerShard") {
@@ -288,6 +309,7 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     push(shard0, b64(recJson(60)))
     push(shard1, b64(recJson(61)))
     chainPages.clear()
+    iteratorCalls.clear()
     // more appends than the poll budget of both shards: a probe that only
     // stops on an EMPTY page would use all maxPollsPerShard pages
     trickle.set(24)
@@ -301,12 +323,14 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val leftOver = trickle.getAndSet(0)
     assert(leftOver == 0, s"the run must consume the whole trickle, $leftOver left")
 
-    // on the wire: every chain (a probe or a read, one GetShardIterator
-    // each) takes at most 2 GetRecords pages
-    val pages = chainPages.asScala.values.toSeq
-    assert(pages.nonEmpty && pages.max <= 2,
-      s"a probe or read chased the tip: pages per chain ${pages.sorted.reverse.take(8)}")
-    // in the source metrics: each trigger's probe, per shard
+    // on the wire: one chain per shard, opened by the first probe and
+    // carried by every later one; no reader opened a chain, since the
+    // store held every range
+    assert(chainPages.size == 2 && iteratorCalls.size == 2,
+      s"one iterator chain per shard, no reader chain: pages per chain " +
+        s"${chainPages.asScala}, iterator calls ${iteratorCalls.asScala.toSeq}")
+    // in the source metrics: each trigger's probe, per shard (the bound
+    // per trigger that a chain spanning triggers no longer shows)
     val probePolls = q.recentProgress.toSeq.flatMap(_.sources.head.metrics.asScala)
       .collect { case (k, v) if k.startsWith("probePolls.") => v.toInt }
     assert(probePolls.nonEmpty && probePolls.max <= 2,
@@ -324,6 +348,160 @@ class KinesisMicroBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(seqs == (0 until store(sh).size).toList,
         s"$sh history complete and unique, got $seqs")
     }
+  }
+
+  /** Every record a partition reader emits, as (shard, seq). */
+  private def readAll(part: org.apache.spark.sql.connector.read.InputPartition): Seq[(String, String)] = {
+    val r = new graft.sources.KinesisPartitionReaderFactory().createReader(part)
+    try Iterator.continually(r.next()).takeWhile(identity)
+      .map(_ => (r.get().getUTF8String(0).toString, r.get().getUTF8String(2).toString)).toList
+    finally r.close()
+  }
+
+  test("over a multi-trigger run each page crosses the wire once, on one iterator per shard") {
+    val buf = new ConcurrentLinkedQueue[(Long, String, String)]()
+    iteratorCalls.clear()
+    pagesServed.clear()
+    val q = graft.sources.KinesisMicroBatchSource
+      .readStream(spark, endpoint, "audit-stream", limitPerPoll = 2)
+      .writeStream
+      .option("checkpointLocation", tmp("kinesis_ckpt_once"))
+      .foreachBatch(collectTo(buf) _)
+      .start()
+    try {
+      q.processAllAvailable() // the whole history, from TRIM_HORIZON
+      (70 until 76).foreach { i =>
+        push(if (i % 2 == 0) shard0 else shard1, b64(recJson(i)))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+
+    val calls = iteratorCalls.asScala.toSeq
+    assert(calls.sortBy(_._1) == Seq((shard0, "TRIM_HORIZON", ""), (shard1, "TRIM_HORIZON", "")),
+      s"one GetShardIterator per shard for the whole run: $calls")
+    val served = pagesServed.asScala.toSeq
+    assert(served.map(_._1).distinct.size == 2,
+      s"every page on the two probe chains, none on a reader chain: ${served.map(_._1).distinct}")
+    val withRecords = served.filter(_._4 > 0).map(p => (p._2, p._3))
+    assert(withRecords.distinct.size == withRecords.size,
+      s"a page crossed the wire twice: ${withRecords.diff(withRecords.distinct)}")
+    Seq(shard0, shard1).foreach { sh =>
+      val seqs = buf.asScala.toSeq.filter(_._2 == sh).map(_._3.toInt)
+      assert(seqs.sorted == (0 until store(sh).size).toList,
+        s"$sh history complete and unique, got ${seqs.sorted}")
+    }
+    // the probes kept every record the batches delivered
+    val stored = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+      .flatMap(_.sources.head.metrics.asScala)
+      .collect { case (k, v) if k.startsWith("storedRecords.") => v.toLong }.sum
+    assert(stored == buf.size, s"storedRecords $stored for ${buf.size} records delivered")
+  }
+
+  test("an expired carried iterator reopens after the checkpointed tip; nothing lost or repeated") {
+    val buf = new ConcurrentLinkedQueue[(Long, String, String)]()
+    val q = graft.sources.KinesisMicroBatchSource
+      .readStream(spark, endpoint, "audit-stream")
+      .writeStream
+      .option("checkpointLocation", tmp("kinesis_ckpt_expired"))
+      .foreachBatch(collectTo(buf) _)
+      .start()
+    try {
+      q.processAllAvailable()
+      val tips = Seq(shard0, shard1).map(sh => sh -> (store(sh).size - 1)).toMap
+      iteratorCalls.clear()
+      expiredRejections.set(0)
+      (1 to chains.get()).foreach(expiredChains.add)
+      push(shard0, b64(recJson(80)), b64(recJson(81)))
+      push(shard1, b64(recJson(82)))
+      q.processAllAvailable()
+      assert(expiredRejections.get() >= 2, "both carried iterators were rejected")
+      val firstByShard = iteratorCalls.asScala.toSeq.groupBy(_._1).map { case (sh, c) => sh -> c.head }
+      Seq(shard0, shard1).foreach { sh =>
+        assert(firstByShard.get(sh).contains((sh, "AFTER_SEQUENCE_NUMBER", tips(sh).toString)),
+          s"$sh reopens after its checkpointed tip ${tips(sh)}: ${iteratorCalls.asScala.toSeq}")
+      }
+    } finally { q.stop(); expiredChains.clear() }
+    Seq(shard0, shard1).foreach { sh =>
+      val seqs = buf.asScala.toSeq.filter(_._2 == sh).map(_._3.toInt)
+      assert(seqs.sorted == (0 until store(sh).size).toList,
+        s"$sh history complete and unique across the expiry, got ${seqs.sorted}")
+    }
+  }
+
+  test("page store: the prefix that fits the bound, oldest-first eviction, taken once") {
+    import graft.sources.{KinesisRecord, ProbePageStore}
+    // records of exactly 200 estimated bytes each
+    def rec(seq: Int): KinesisRecord = {
+      val r = KinesisRecord("s", "pk", seq.toString, "")
+      r.copy(data = "x" * (200 - ProbePageStore.bytesOf(r).toInt))
+    }
+    def page(seqs: Int*): IndexedSeq[KinesisRecord] = seqs.map(rec).toIndexedSeq
+    val st = new ProbePageStore(1000)
+    // a probe that overflows the bound keeps its first five records
+    assert(st.put(("a", "s", None), List(page(1, 2, 3), page(4, 5, 6), page(7))) == 5)
+    assert(st.usedBytes == 1000)
+    assert(st.take(("a", "s", None)) == List(page(1, 2, 3), page(4, 5)))
+    assert(st.take(("a", "s", None)) == Nil, "an entry is taken once")
+    assert(st.usedBytes == 0)
+    // room for a new entry is made by evicting the oldest
+    st.put(("a", "s", Some("0")), List(page(1, 2)))
+    st.put(("a", "s", Some("2")), List(page(3, 4)))
+    st.put(("b", "s", Some("4")), List(page(5, 6)))
+    assert(st.take(("a", "s", Some("0"))) == Nil, "the oldest entry was evicted")
+    assert(st.take(("a", "s", Some("2"))) == List(page(3, 4)))
+    // a stopped stream instance drops its entries, and only its own
+    st.put(("a", "s", Some("6")), List(page(7)))
+    st.dropInstance("a")
+    assert(st.take(("a", "s", Some("6"))) == Nil)
+    assert(st.take(("b", "s", Some("4"))) == List(page(5, 6)))
+    assert(st.usedBytes == 0)
+  }
+
+  test("a reader whose stored prefix ends before endSeq reads the rest from the wire once") {
+    import graft.sources.{KinesisInputPartition, KinesisRecord, ProbePageStore}
+    while (store(shard0).synchronized(store(shard0).size) < 9) push(shard0, b64(recJson(90)))
+    val data = store(shard0).synchronized(store(shard0).toIndexedSeq)
+    def rec(i: Int) = KinesisRecord(shard0, s"pk-$i", i.toString, data(i))
+    ProbePageStore.local.put(("reader-spec", shard0, Some("2")), List(IndexedSeq(rec(3), rec(4))))
+    iteratorCalls.clear()
+    pagesServed.clear()
+    val part = KinesisInputPartition(endpoint, "audit-stream", shard0, Some("2"), "8",
+      limitPerPoll = 2, Map.empty, "reader-spec", None)
+    assert(readAll(part) == (3 to 8).map(i => (shard0, i.toString)))
+    assert(iteratorCalls.asScala.toSeq == Seq((shard0, "AFTER_SEQUENCE_NUMBER", "4")),
+      s"one iterator after the stored prefix: ${iteratorCalls.asScala.toSeq}")
+    assert(pagesServed.asScala.toSeq.map(p => (p._3, p._4)) == Seq((5, 2), (7, 2)),
+      s"the wire served only the missing pages: ${pagesServed.asScala.toSeq}")
+  }
+
+  test("a new stream instance reads a replayed range from the wire, not another instance's pages") {
+    import graft.sources.{KinesisMicroBatchStream, KinesisOffset}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    spark
+    val opts = Map("endpoint" -> endpoint, "streamname" -> "audit-stream",
+      "limitperpoll" -> "500", "maxpollspershard" -> "100")
+    val first = new KinesisMicroBatchStream(opts)
+    val restarted = new KinesisMicroBatchStream(opts)
+    val start = KinesisOffset(Map.empty)
+    try {
+      iteratorCalls.clear()
+      val end = first.latestOffset(start, ReadLimit.allAvailable())
+      assert(iteratorCalls.size == 2, "the probe opens one iterator per shard")
+      val history = Seq(shard0, shard1).flatMap(sh =>
+        (0 until store(sh).size).map(i => (sh, i.toString))).toSet
+      // a restart replays the logged range without probing: its store is empty
+      val replayed = restarted.planInputPartitions(start, end)
+      assert(replayed.forall(_.preferredLocations().isEmpty))
+      assert(replayed.flatMap(readAll).toSet == history)
+      assert(iteratorCalls.size == 4, "each replayed partition opened its own iterator")
+      // the probing instance's reader takes the stored pages, off the wire
+      val probed = first.planInputPartitions(start, end)
+      assert(probed.forall(_.preferredLocations().length == 1),
+        "each partition prefers the executor that probed it")
+      val fromStore = probed.toSeq.flatMap(readAll)
+      assert(fromStore.size == history.size && fromStore.toSet == history)
+      assert(iteratorCalls.size == 4, "the stored pages needed no wire call")
+    } finally { first.stop(); restarted.stop() }
   }
 
   test("caughtUp: MillisBehindLatest decides when reported; otherwise only an empty page") {

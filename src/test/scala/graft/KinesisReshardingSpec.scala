@@ -278,7 +278,7 @@ class KinesisReshardingSpec extends AnyFunSuite {
       assert(reads.asScala.toSeq == Seq(p),
         s"one GetRecords page settles the parent: ${reads.asScala.toSeq}")
       assert(stream.metrics(java.util.Optional.of(end0)).asScala ==
-        Map(s"probePolls.$p" -> "1", s"millisBehindLatest.$p" -> "0"))
+        Map(s"probePolls.$p" -> "1", s"storedRecords.$p" -> "3", s"millisBehindLatest.$p" -> "0"))
       val end1 = stream.latestOffset(end0, ReadLimit.allAvailable())
         .asInstanceOf[KinesisOffset]
       assert(end1.positions == Map(p -> "2|done", c -> "1"),
