@@ -27,7 +27,7 @@ object ScalingProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.TextKernels.register(spark)
+    GraftExtensions.install(spark)
 
     // Same corpus prep as q66/q86/q103 (DedupQueries.withShingles + the
     // array_distinct normalization the join operators apply internally).
@@ -75,7 +75,6 @@ object ScalingProbe {
       .select(col("shingle"), col("doc_id").as("train_id"))
     val evalSh = docSh.filter(col("doc_id") % 97 === 0)
       .select(col("shingle"), col("doc_id").as("test_id"))
-    operators.BloomDecontam.register(spark)
     val bf = evalSh.agg(expr("bloom_filter_agg(xxhash64(shingle), 65536L)").as("bf"))
       .head().getAs[Array[Byte]](0)
     val b64 = java.util.Base64.getEncoder.encodeToString(bf)

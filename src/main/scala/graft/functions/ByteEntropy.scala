@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
@@ -86,10 +85,4 @@ case class ByteEntropy(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object ByteEntropy {
-  /** Register `byte_entropy` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "byte_entropy") { case Seq(t) => ByteEntropy(t) }
 }

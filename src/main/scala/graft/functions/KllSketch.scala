@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -114,19 +113,4 @@ object KllSketch {
         s"kll_quantiles: expected an array literal, got $other")
     }
   }
-
-  /** Register `kll_quantiles(col, k, array(ppm...))` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "kll_quantiles") {
-      case Seq(c, kLit, ppmsLit) =>
-        require(kLit.foldable,
-          s"kll_quantiles: k must be a foldable integer literal, got ${kLit.sql}")
-        val k = kLit.eval(null) match {
-          case i: Int  => i
-          case l: Long => l.toInt
-          case other   => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        KllQuantilesAgg(c, k, ppmList(ppmsLit)).toAggregateExpression()
-    }
 }

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -98,23 +97,4 @@ case class KmvSketchAgg(child: Expression, k: Int,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): KmvSketchAgg =
     copy(child = newChild)
-}
-
-object KmvSketch {
-  /** Register `kmv_sketch(hash60, k)` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "kmv_sketch") {
-      case Seq(h, kLit) =>
-        // k sizes the bounded buffer — a plan-time constant, same
-        // discipline as topk_pair.
-        require(kLit.foldable,
-          s"kmv_sketch: k must be a foldable integer literal, got ${kLit.sql}")
-        val k = kLit.eval(null) match {
-          case i: Int  => i
-          case l: Long => l.toInt
-          case other   => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        KmvSketchAgg(h, k).toAggregateExpression()
-    }
 }

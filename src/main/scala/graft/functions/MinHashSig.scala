@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -89,12 +88,6 @@ case class MinHashSig(child: Expression, numHashes: Int = 32)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object MinHashSig {
-  /** Register `minhash_sig` for use from expr()/SQL (1-arg form, k=32). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "minhash_sig")(es => MinHashSig(es.head))
 }
 
 /** One-pass LSH band hashes: `minhash_bands(array<string>) -> array<bigint>`
@@ -206,10 +199,4 @@ case class MinHashBands(child: Expression, numHashes: Int = 32, numBands: Int = 
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object MinHashBands {
-  /** Register `minhash_bands` (1-arg form: k=32, 8 bands). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "minhash_bands")(es => MinHashBands(es.head))
 }

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -112,18 +111,4 @@ case class MisraGriesAgg(child: Expression, k: Int,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): MisraGriesAgg =
     copy(child = newChild)
-}
-
-object MisraGries {
-  /** Register `misra_gries(col, k)` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "misra_gries") {
-        case Seq(c, kLit) =>
-          val k = kLit.eval(null) match {
-            case i: Int  => i
-            case l: Long => l.toInt
-            case other   => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-          }
-          MisraGriesAgg(c, k).toAggregateExpression()
-      }
 }

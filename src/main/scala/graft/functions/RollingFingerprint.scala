@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -81,9 +80,4 @@ case class RollingFingerprint(child: Expression, k: Int = 16)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object RollingFingerprint {
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "rolling_fp")(es => RollingFingerprint(es.head))
 }

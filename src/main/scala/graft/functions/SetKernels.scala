@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -130,11 +129,4 @@ case class SortedOverlapL(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SetKernels {
-  def register(spark: SparkSession): Unit = {
-    RegisterOnce(spark, "sorted_overlap")(es => SortedOverlap(es(0), es(1)))
-    RegisterOnce(spark, "sorted_overlap_l")(es => SortedOverlapL(es(0), es(1)))
-  }
 }

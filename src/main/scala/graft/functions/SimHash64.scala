@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -90,10 +89,4 @@ case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInpu
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object SimHash64 {
-  /** Register `simhash64` for use from expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "simhash64")(es => SimHash64(es.head))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -272,32 +271,4 @@ case class WordCount(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object TextKernels {
-  private def lit(e: Expression): Int =
-    e.eval(null) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
-
-  /** Register `word_shingles` / `word_ngrams` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit = {
-    RegisterOnce(spark, "word_shingles") {
-      case Seq(t)    => WordShingles(t)
-      case Seq(t, n) => WordShingles(t, lit(n))
-    }
-    RegisterOnce(spark, "word_ngrams") {
-      case Seq(t)    => WordNgrams(t)
-      case Seq(t, n) => WordNgrams(t, lit(n))
-    }
-    RegisterOnce(spark, "word_segments") {
-      case Seq(t)    => WordSegments(t)
-      case Seq(t, n) => WordSegments(t, lit(n))
-    }
-    RegisterOnce(spark, "word_count") {
-      case Seq(t) => WordCount(t)
-    }
-  }
 }

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -113,27 +112,4 @@ case class TopKPairsAgg(valueExpr: Expression, idExpr: Expression, k: Int,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopKPairsAgg =
     copy(valueExpr = newLeft, idExpr = newRight)
-}
-
-object TopKPairs {
-  /** Register `topk_pair(value, id, k)` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "topk_pair") {
-      case Seq(v, id, kLit) =>
-        // k is a plan-time constant (it sizes the aggregation buffer): a
-        // column reference here would eval(null) to an opaque NPE or a
-        // wrong constant, so reject anything non-foldable up front.
-        require(kLit.foldable,
-          s"topk_pair: k must be a foldable integer literal, got non-foldable ${kLit.sql}")
-        val k = kLit.eval(null) match {
-          case i: Int   => i
-          case l: Long  => l.toInt
-          case s: Short => s.toInt
-          case b: Byte  => b.toInt
-          case other    => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        require(k > 0, s"topk_pair: k must be positive, got $k")
-        TopKPairsAgg(v, id, k).toAggregateExpression()
-    }
 }

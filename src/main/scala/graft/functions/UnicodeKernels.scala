@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -114,12 +113,4 @@ case class NormAscii(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object UnicodeKernels {
-  /** Register `nfc_normalize` / `norm_ascii` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit = {
-    RegisterOnce(spark, "nfc_normalize") { case Seq(t) => NfcNormalize(t) }
-    RegisterOnce(spark, "norm_ascii") { case Seq(t) => NormAscii(t) }
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -136,10 +135,4 @@ case class VecMomentsAgg(child: Expression,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): VecMomentsAgg =
     copy(child = newChild)
-}
-
-object VecMoments {
-  /** Register `vec_moments(arrayCol)` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "vec_moments")(es => VecMomentsAgg(es.head).toAggregateExpression())
 }

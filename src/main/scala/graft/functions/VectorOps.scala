@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -555,20 +555,6 @@ case class Int8ErrNanos(child: Expression)
 }
 
 object VectorOps {
-
-  /** Register `dot_f` / `l2norm_f` in the session's function registry so they
-    * are usable from `expr(...)` / SQL. Idempotent; cheap to call per query. */
-  def register(spark: SparkSession): Unit = {
-    RegisterOnce(spark, "dot_f")(es => DotProductF(es(0), es(1)))
-    RegisterOnce(spark, "l2norm_f")(es => L2NormF(es.head))
-    RegisterOnce(spark, "l2dist2_f")(es => L2Dist2F(es(0), es(1)))
-    RegisterOnce(spark, "l2dist2_l")(es => L2Dist2L(es(0), es(1)))
-    RegisterOnce(spark, "dot_l")(es => DotProductL(es(0), es(1)))
-    RegisterOnce(spark, "absmax_f")(es => AbsMaxF(es.head))
-    RegisterOnce(spark, "int8_err_nanos")(es => Int8ErrNanos(es.head))
-    RegisterOnce(spark, "sign_bits_f")(es => SignBitsF(es.head))
-  }
-
   /** Dot product of two array<float> columns (codegen'd). */
   def dotF(a: String, b: String): Column = expr(s"dot_f($a, $b)")
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.types._
@@ -57,14 +56,4 @@ case class WeightedAvgCents(x: Expression, w: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(x = newChildren(0), w = newChildren(1))
-}
-
-object WeightedAvg {
-
-  /** Register `weighted_avg_cents` in the session registry (the Analyzer
-    * wraps the returned AggregateFunction in an AggregateExpression, so it
-    * is usable directly in `expr(...)`/SQL aggregates). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "weighted_avg_cents")(
-      es => WeightedAvgCents(es(0), es(1)))
 }

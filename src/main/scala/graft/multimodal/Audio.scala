@@ -192,7 +192,7 @@ object Audio {
   def features(audio: Dataset[AudioRecord])(
       implicit spark: SparkSession): Dataset[AudioFeatures] = {
     import spark.implicits._
-    AudioKernels.register(spark)
+    graft.GraftExtensions.install(spark)
     audio.toDF()
       .select(col("doc_id"), expr("wav_energy(wav)").as("f"))
       .select(col("doc_id"), col("f.sample_rate").as("sample_rate"),
@@ -266,19 +266,4 @@ case class WavVad(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): WavVad =
     copy(child = newChild)
-}
-
-object AudioKernels {
-  /** Register `wav_for` / `wav_energy` / `wav_vad` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit = {
-    graft.functions.RegisterOnce(spark, "wav_for") {
-      case Seq(id, n) => WavFor(id, n)
-    }
-    graft.functions.RegisterOnce(spark, "wav_energy") {
-      case Seq(b) => WavEnergy(b)
-    }
-    graft.functions.RegisterOnce(spark, "wav_vad") {
-      case Seq(b) => WavVad(b)
-    }
-  }
 }

@@ -302,15 +302,3 @@ case class MediaDims(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): MediaDims =
     copy(child = newChild)
 }
-
-object MediaKernels {
-  /** Register `media_for` / `media_dims` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit = {
-    graft.functions.RegisterOnce(spark, "media_for") {
-      case Seq(id, t) => MediaFor(id, t)
-    }
-    graft.functions.RegisterOnce(spark, "media_dims") {
-      case Seq(b) => MediaDims(b)
-    }
-  }
-}

@@ -3,7 +3,6 @@ package graft.multimodal
 import java.io.ByteArrayOutputStream
 import java.util.zip.{CRC32, Deflater, Inflater}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -263,16 +262,4 @@ case class PngPixelSums(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): PngPixelSums =
     copy(child = newChild)
-}
-
-object PngKernels {
-  /** Register `png_for` / `png_pixel_sums` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit = {
-    graft.functions.RegisterOnce(spark, "png_for") {
-      case Seq(id) => PngFor(id)
-    }
-    graft.functions.RegisterOnce(spark, "png_pixel_sums") {
-      case Seq(b) => PngPixelSums(b)
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -210,16 +209,4 @@ case class AviIndex(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): AviIndex =
     copy(child = newChild)
-}
-
-object VideoKernels {
-  /** Register `avi_for` / `avi_index` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit = {
-    graft.functions.RegisterOnce(spark, "avi_for") {
-      case Seq(id, n) => AviFor(id, n)
-    }
-    graft.functions.RegisterOnce(spark, "avi_index") {
-      case Seq(b) => AviIndex(b)
-    }
-  }
 }

@@ -3,8 +3,6 @@ package graft.operators
 import java.util.Base64
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /** Bloom-pre-filtered benchmark decontamination — the two-stage shape for
@@ -46,16 +44,6 @@ import org.apache.spark.sql.functions._
   * the exchange volume: |train shingles| → |hits| + fpp·|train shingles|.
   */
 object BloomDecontam {
-
-  /** Register the Bloom pair under explicit names (not registered by
-    * default — Spark only instantiates them inside optimizer rules). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.RegisterOnce(spark, "bloom_filter_agg")(
-      es => new BloomFilterAggregate(es(0), es(1)))
-    graft.functions.RegisterOnce(spark, "bloom_might_contain")(
-      es => BloomFilterMightContain(es(0), es(1)))
-  }
-
   /** All (train_id, test_id, n_shared) pairs sharing ≥ `minShared`
     * shingles, Bloom-pruned then exactly joined. `train`/`eval` carry
     * (`shingle`, `train_id`) / (`shingle`, `test_id`); `expectedItems` is
@@ -81,7 +69,7 @@ object BloomDecontam {
   def contaminatedPairs(train: DataFrame, eval: DataFrame,
       expectedItems: Long, minShared: Int): DataFrame = {
     val spark = train.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     val firstPass = eval.agg(
       count(lit(1)).as("n"),
       // 5% default rsd; the 1.2x margin below absorbs it, so a borderline

@@ -95,7 +95,7 @@ object CosineLshJoin {
   def nearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       tables: Int, planesPerTable: Int, dim: Int, tau: Double,
       seed: Long = 12345L, simScale: Int = 4): DataFrame = {
-    graft.functions.VectorOps.register(df.sparkSession)
+    graft.GraftExtensions.install(df.sparkSession)
     val cand = candidatePairs(df, idCol, vecCol, tables, planesPerTable, dim, seed)
     val slim = df.select(col(idCol), col(vecCol))
     cand

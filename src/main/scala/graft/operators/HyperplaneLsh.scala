@@ -38,7 +38,7 @@ object HyperplaneLsh {
   /** `df` + a `bucket` column over `vecCol` with `numPlanes` hyperplanes. */
   def withBucket(df: DataFrame, vecCol: String, numPlanes: Int, dim: Int,
       seed: Long = 12345L): DataFrame = {
-    graft.functions.VectorOps.register(df.sparkSession)
+    graft.GraftExtensions.install(df.sparkSession)
     df.withColumn("bucket", bucketCol(vecCol, planes(numPlanes, dim, seed)))
   }
 }

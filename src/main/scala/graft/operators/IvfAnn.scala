@@ -30,7 +30,7 @@ object IvfAnn {
     * strided-sample centroids. Returns (assigned, centroids):
     * assigned = vectors + `cid`; centroids = (cid, centroid vector). */
   def build(vectors: DataFrame, idCol: String, vecCol: String, k: Int): (DataFrame, DataFrame) = {
-    graft.functions.VectorOps.register(vectors.sparkSession)
+    graft.GraftExtensions.install(vectors.sparkSession)
     // deterministic strided sample as the coarse quantizer
     val n = vectors.count()
     val stride = math.max(1L, n / k)
@@ -55,7 +55,7 @@ object IvfAnn {
   def search(assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
       qIdCol: String, qVecCol: String, idCol: String, vecCol: String,
       nprobe: Int, topK: Int): DataFrame = {
-    graft.functions.VectorOps.register(assigned.sparkSession)
+    graft.GraftExtensions.install(assigned.sparkSession)
     val wProbe = Window.partitionBy(col(qIdCol)).orderBy(col("__cdot").desc, col("cid"))
     val probes = queries.crossJoin(broadcast(centroids))
       .withColumn("__cdot", round(expr(s"dot_f($qVecCol, centroid)"), 4))

@@ -85,7 +85,7 @@ object KMeansLloyd {
   def fit(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1)
-    graft.functions.VectorOps.register(vectors.sparkSession)
+    graft.GraftExtensions.install(vectors.sparkSession)
     val q = vectors.select(col(idCol), quantize(vecCol).as("qvec"))
     val n = q.count()
     val stride = math.max(1L, n / k)

@@ -72,7 +72,7 @@ object PqAnn {
   def build(vectors: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, dim: Int, iters: Int = 1): (DataFrame, DataFrame) = {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    graft.functions.VectorOps.register(vectors.sparkSession)
+    graft.GraftExtensions.install(vectors.sparkSession)
     val sub = dim / m
     val n = vectors.count()
     val stride = math.max(1L, n / k)
@@ -133,7 +133,7 @@ object PqAnn {
     * table. */
   def queryTable(codebook: DataFrame, queries: DataFrame,
       qIdCol: String, qVecCol: String, m: Int, dim: Int): DataFrame = {
-    graft.functions.VectorOps.register(queries.sparkSession)
+    graft.GraftExtensions.install(queries.sparkSession)
     val sub = dim / m
     queries
       .select(col(qIdCol), explode(array((0 until m).map(lit): _*)).as("s"), col(qVecCol).as("__v"))
@@ -146,7 +146,7 @@ object PqAnn {
   def search(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
       qIdCol: String, qVecCol: String, idCol: String,
       m: Int, dim: Int, topK: Int): DataFrame = {
-    graft.functions.VectorOps.register(codes.sparkSession)
+    graft.GraftExtensions.install(codes.sparkSession)
     val qTable = queryTable(codebook, queries, qIdCol, qVecCol, m, dim)
     val wTop = Window.partitionBy(col(qIdCol)).orderBy(col("adist_u"), col(idCol))
     codes.join(broadcast(qTable), Seq("s", "code"))

@@ -51,7 +51,7 @@ object SetSimilarityJoin {
       threshold: Double, ck: CheckpointTracker = null,
       normalized: Boolean = false): DataFrame = {
     val ckpt: DataFrame => DataFrame = if (ck == null) identity else ck.lazyCkpt
-    graft.functions.SetKernels.register(sets.sparkSession)
+    graft.GraftExtensions.install(sets.sparkSession)
     val norm: Column => Column = if (normalized) identity else array_distinct
     val ss = ckpt(sets.select(col(idCol), norm(col(setCol)).as("_set")))
     // Verify the RAW candidate stream and dedup the verified output, not
@@ -107,7 +107,7 @@ object SetSimilarityJoin {
       threshold: Double, ck: CheckpointTracker = null,
       normalized: Boolean = false): DataFrame = {
     val ckpt: DataFrame => DataFrame = if (ck == null) identity else ck.lazyCkpt
-    graft.functions.SetKernels.register(sets.sparkSession)
+    graft.GraftExtensions.install(sets.sparkSession)
     val norm: Column => Column = if (normalized) identity else array_distinct
     val ss = ckpt(sets.select(col(idCol), norm(col(setCol)).as("_set")))
     // Raw candidate stream + verified-output dedup, same reasoning as

@@ -31,7 +31,7 @@ object CorpusQueries {
     * Fingerprints of the normalized text are md5, portable to DuckDB's
     * `nfc_normalize`. */
   private val q94: Q = (s, d) => {
-    graft.functions.UnicodeKernels.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       // lengths cast to long: Spark length() is INT where DuckDB's is
       // BIGINT - the round-14 type sweep flagged the width mismatch
@@ -109,7 +109,7 @@ object CorpusQueries {
     * aggregates keyed by (doc_id, gram) then doc_id — fully parallel, and
     * the ratios are single IEEE divisions of exact integer counts. */
   private val q96: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     val docs = Tables.documents(s, d)
     val wc = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -336,7 +336,7 @@ object CorpusQueries {
     // is also the one piece of the old shape that breaks at 100 TB).
     // min(key) per seg is unchanged, so keep flags and output are
     // byte-identical; the oracle SQL is unchanged.
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     val segs = Tables.documents(s, d)
       .select(col("doc_id"),
         posexplode(expr("word_segments(text, 3)")).as(Seq("pos", "seg")))
@@ -387,7 +387,7 @@ object CorpusQueries {
     * Jaccard is exact integer ppm (q68 precedent). Zero-overlap pairs are
     * absent from the output (inner semantics, matching the oracle). */
   private val q113: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     // Round 17 (the r16 verdict's item #7): checkpointing the distinct
     // (source, shingle) stream for its two consumers was measured BOTH
     // ways — it wins at sf0.1 (4/4 interleaved pairs, min 1.47 vs 1.75 s)
@@ -490,7 +490,7 @@ object CorpusQueries {
     * against the per-doc shingle census. Two map-side-combinable hash aggs
     * + one tiny-key join; the exploded shingle stream is shuffled once. */
   private val q117: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     // word_shingles output is ALREADY distinct (first-occurrence order, the
     // kernel's contract, pinned in TextKernelsSpec) — the former
     // array_distinct wrapper re-deduplicated an already-unique string array
@@ -591,7 +591,7 @@ object CorpusQueries {
     * streams through explode → hash → join → per-doc sum, shuffling only
     * (doc_id) partial sums. Three corpus passes, none pair-joined. */
   private val q124: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     val B = 256
     val docs = Tables.documents(s, d).filter(expr("word_count(text) >= 2"))
     val feats = docs.select(col("doc_id"), col("lang"),
@@ -723,7 +723,7 @@ object CorpusQueries {
     // (functions/AsciiNormKernel, semantics == the lower/strip/collapse/
     // trim regexp chain, pinned by NormAsciiSpec; the chain's four
     // allocating passes were the dominant cost of this scan at sf1)
-    graft.functions.UnicodeKernels.register(s)
+    graft.GraftExtensions.install(s)
     val n = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("text"))
       .withColumn("m", when(col("doc_id") % 3 === 0, upper(col("text")))

@@ -125,7 +125,7 @@ object CurationQueries {
     * values, but pinned anyway) break by doc_id inside the aggregate's
     * total order. */
   private val q167: Q = (s, d) => {
-    graft.functions.TopKPairs.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .select(col("source"), col("doc_id"),
         expr("-(" +
@@ -166,7 +166,7 @@ object CurationQueries {
     * (KMeansLloyd discipline); output is the 2-prime × same/diff-label
     * census, so both engines reduce to 4 rows of exact longs. */
   private val q169: Q = (s, d) => {
-    graft.functions.VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val emb = Tables.embeddings(s, d)
     // Corpus size rides the plan as a broadcast 1-row aggregate (the q170
     // one-action discipline) — never a driver-side count() pre-pass.

@@ -26,7 +26,7 @@ object DedupQueries {
     * 17) — `size(split(text, ' '))` built the full word array per document
     * just to count it. */
   private def withShingles(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.TextKernels.register(df.sparkSession)
+    graft.GraftExtensions.install(df.sparkSession)
     df.filter(expr(s"word_count($textCol) >= 3"))
       .withColumn("sh", expr(s"word_shingles($textCol, 3)"))
   }
@@ -85,7 +85,7 @@ object DedupQueries {
     * not once per band). Rows = doc × band; joining this table to itself on
     * (band_id, band_hash) yields candidate pairs. */
   private val q37: Q = (s, d) => {
-    graft.functions.MinHashBands.register(s)
+    graft.GraftExtensions.install(s)
     withShingles(Tables.documents(s, d), "text")
       .select(col("doc_id"), posexplode(expr("minhash_bands(sh)")))
       .withColumnRenamed("pos", "band_id")
@@ -96,7 +96,7 @@ object DedupQueries {
   /** LSH candidate pairs (band-bucket join) verified by exact Jaccard.
     * Used by tests and by callers with planted near-duplicates. */
   def minhashCandidates(docs: DataFrame, threshold: Double): DataFrame = {
-    graft.functions.MinHashBands.register(docs.sparkSession)
+    graft.GraftExtensions.install(docs.sparkSession)
     val sh = withShingles(docs, "text")
     val bands = sh.select(col("doc_id"), col("sh"), posexplode(expr("minhash_bands(sh)")))
       .withColumnRenamed("pos", "band_id").withColumnRenamed("col", "band_hash")
@@ -177,7 +177,6 @@ object DedupQueries {
     // |a∪b| = |a| + |b| − |a∩b|. Values identical to the old
     // array_intersect/array_union formulation — the DuckDB oracle is
     // unchanged.
-    graft.functions.SetKernels.register(s)
     val sorted = docs.select(col("doc_id"), sort_array(col("sh")).as("sh"))
     val x = sorted.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val y = sorted.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
@@ -494,7 +493,7 @@ object DedupQueries {
     * SLOWER than the "slow" portable twin q67 — the exact trap the
     * MinHashSig scaladoc documents for q37. */
   private val q38: Q = (s, d) => {
-    graft.functions.SimHash64.register(s)
+    graft.GraftExtensions.install(s)
     val sig = Tables.documents(s, d)
       .withColumn("simhash", expr("simhash64(array_distinct(split(text, ' ')))"))
       .select(col("doc_id"), col("simhash"))
@@ -746,7 +745,6 @@ object DedupQueries {
         .select(col("band_id"), col("band_hash"), col("doc_id").as("new_id")),
         Seq("band_id", "band_hash"))
       .select(col("old_id"), col("new_id")).distinct()
-    graft.functions.SetKernels.register(s)
     val sorted = sh.select(col("doc_id"), sort_array(col("sh")).as("sh"))
     val near = cand
       .join(sorted.select(col("doc_id").as("old_id"), col("sh").as("sh_a")), Seq("old_id"))

@@ -139,7 +139,7 @@ object EventQueries {
     * as the documented typed-API demo, equivalence-tested in
     * WeightedAvgSpec). */
   private val q29: Q = (s, d) => {
-    graft.functions.WeightedAvg.register(s)
+    graft.GraftExtensions.install(s)
     withK(Tables.events(s, d))
       .withColumn("cents", (money(col("value")) * 100).cast("long"))
       .filter(col("k").isNotNull && col("cents").isNotNull)
@@ -797,7 +797,7 @@ object EventQueries {
     * event_id ASC inside the aggregate's total order, so the kept set is
     * merge-order-invariant and the two engines agree exactly. */
   private val q139: Q = (s, d) => {
-    graft.functions.TopKPairs.register(s)
+    graft.GraftExtensions.install(s)
     Tables.events(s, d)
       .select(col("event_type"), col("event_id"),
         (money(col("value")) * 100).cast("long").as("cents"))

@@ -27,7 +27,7 @@ object MultimodalQueries {
     * (Multimodal.extractFeatures) remains the API for callers that carry
     * the metadata sidecar (q64/q79). */
   private val q63: Q = (s, d) => {
-    graft.multimodal.MediaKernels.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         expr("media_dims(media_for(doc_id, text))").as("f"))
@@ -108,7 +108,7 @@ object MultimodalQueries {
     * scan → one WholeStageCodegen projection → sort, no mapPartitions
     * encoder boundary anywhere in the plan. */
   private val q152: Q = (s, d) => {
-    graft.multimodal.AudioKernels.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .filter(col("n_chars") >= 1)
       .select(col("doc_id"),
@@ -148,7 +148,7 @@ object MultimodalQueries {
     * sort: no mapPartitions encoder boundary, nothing per-row but the
     * kernel call. */
   private val q159: Q = (s, d) => {
-    graft.multimodal.VideoKernels.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         expr("avi_index(avi_for(doc_id, n_chars))").as("f"))
@@ -193,7 +193,7 @@ object MultimodalQueries {
     * Map-only; one bounded feature row per object regardless of
     * duration. */
   private val q206: Q = (s, d) => {
-    graft.multimodal.AudioKernels.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .filter(col("n_chars") >= 1)
       .select(col("doc_id"),
@@ -256,7 +256,7 @@ object MultimodalQueries {
     * chunks, plus both ImageIO cross-decodes. Map-only codegen; one
     * bounded row per image, pixels never shuffle. */
   private val q225: Q = (s, d) => {
-    graft.multimodal.PngKernels.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         expr("png_pixel_sums(png_for(doc_id))").as("f"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.VectorOps
 import graft.operators.KMeansLloyd
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -47,7 +46,7 @@ object SimilarityQueries {
 
   // ---------------------------------------------------------------- q40
   private val q40: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
     e.crossJoin(broadcast(q))
@@ -68,7 +67,7 @@ object SimilarityQueries {
 
   // ---------------------------------------------------------------- q41
   private val q41: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val e = Tables.embeddings(s, d)
     val qs = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -96,7 +95,7 @@ object SimilarityQueries {
 
   // ---------------------------------------------------------------- q42
   private val q42: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val e = Tables.embeddings(s, d)
     val a = e.select(col("vec_id"), col("embedding"))
     val b = e.select((col("vec_id") - 1).as("vec_id"), col("embedding").as("emb_b"))
@@ -128,7 +127,7 @@ object SimilarityQueries {
     * in-bucket scoring, top-k — hash-for-hash. Approximation here means
     * "only scores its own bucket", not "nondeterministic". */
   private val q43: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val e = graft.operators.HyperplaneLsh.withBucket(
       Tables.embeddings(s, d), "embedding", numPlanes = 4, dim = 64)
     val qs = e.filter(col("vec_id") < 5)
@@ -534,7 +533,7 @@ object SimilarityQueries {
     * only correct-and-affordable shape. Per-query top-k stays a bounded
     * window over the (tiny) filtered candidate set. */
   private val q111: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val e = Tables.embeddings(s, d)
     val qs = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -584,7 +583,7 @@ object SimilarityQueries {
     * into a local relation before the n_sources² self-cross; the corpus
     * pipeline is never pair-joined and never re-executed per side. */
   private val q114: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val src = Tables.documents(s, d)
       .select(col("doc_id").as("vec_id"), col("source"))
     val q = Tables.embeddings(s, d).join(src, Seq("vec_id"))
@@ -643,7 +642,7 @@ object SimilarityQueries {
     * bounded keys. Sims round to 4 decimals with id tie-breaks (q41
     * precedent) so both engines pick identical argmaxes. */
   private val q125: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     val e = Tables.embeddings(s, d)
     val a = e.filter(col("label") === 0)
       .select(col("vec_id").as("a_id"), col("embedding").as("ea"))
@@ -693,7 +692,7 @@ object SimilarityQueries {
     * the audit rides the same scan that would write the quantized copies.
     * The oracle replays the identical IEEE chain over UNNEST. */
   private val q131: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     Tables.embeddings(s, d)
       // domain parity with the oracle: its UNNEST-derived per-vector CTEs
       // have no rows for a zero-length vector, so the inner join would
@@ -755,7 +754,7 @@ object SimilarityQueries {
     * scored scan + one bounded-key agg — the corpus is never self-joined
     * and never shuffled by vector. */
   private val q137: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     // empty-vector rows are excluded on both engines (q131 domain-parity
     // note: the oracle's UNNEST centroid/distance CTEs cannot see them)
     val q = Tables.embeddings(s, d)
@@ -808,7 +807,7 @@ object SimilarityQueries {
     * integer div. Map-only + one bounded-key agg; the audit rides the
     * same scan that would write the truncated copies. */
   private val q151: Q = (s, d) => {
-    VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     Tables.embeddings(s, d)
       // q131 domain-parity note: exclude empty vectors on both engines
       .filter(size(col("embedding")) > 0)
@@ -883,7 +882,7 @@ object SimilarityQueries {
     * q126's 3 PageRank rounds), not a convergence claim — both engines
     * run the same 3 rounds bit-for-bit. */
   private val q178: Q = (s, d) => {
-    graft.functions.VecMoments.register(s)
+    graft.GraftExtensions.install(s)
     val mom = Tables.embeddings(s, d)
       .select(KMeansLloyd.quantize("embedding").as("qvec"))
       .agg(expr("vec_moments(qvec)").as("mom"))
@@ -994,8 +993,7 @@ object SimilarityQueries {
     * rows). Recall is the documented BQ trade (the shortlist is the
     * contract, not the true top-k) — q41 stays the exact witness. */
   private val q188: Q = (s, d) => {
-    VectorOps.register(s)
-    graft.functions.TopKPairs.register(s)
+    graft.GraftExtensions.install(s)
     val e = bq64Embeddings(s, d)
     val b = e.select(col("vec_id"), expr("sign_bits_f(embedding)").as("bits"))
     val qs = b.filter(col("vec_id") < 5)
@@ -1070,8 +1068,7 @@ object SimilarityQueries {
     * production — run it on a sampled query set (q157's posture) when
     * the query log is corpus-sized. */
   private val q192: Q = (s, d) => {
-    VectorOps.register(s)
-    graft.functions.TopKPairs.register(s)
+    graft.GraftExtensions.install(s)
     val e = bq64Embeddings(s, d)
     val b = e.select(col("vec_id"), expr("sign_bits_f(embedding)").as("bits"))
     val qs = b.filter(col("vec_id") < 5)

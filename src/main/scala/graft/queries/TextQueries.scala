@@ -41,7 +41,7 @@ object TextQueries {
 
   // ---------------------------------------------------------------- q31
   private val q31: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .filter(expr("word_count(text) >= 2"))
       .select(explode(expr("word_ngrams(text, 2)")).as("bigram"))
@@ -180,7 +180,7 @@ object TextQueries {
     * HUGEINT with explicit mod and two's-complement reinterpretation —
     * the fingerprint is checked value-for-value, not by proxy. */
   private val q65: Q = (s, d) => {
-    graft.functions.RollingFingerprint.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .withColumn("fp_roll", expr("rolling_fp(text)"))
       .groupBy(col("fp_roll"))
@@ -451,7 +451,7 @@ object TextQueries {
     * candidate set never reaches the output, so the result is
     * deterministic and the oracle is a plain GROUP BY + HAVING. */
   private val q105: Q = (s, d) => {
-    graft.functions.MisraGries.register(s)
+    graft.GraftExtensions.install(s)
     val words = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -609,7 +609,7 @@ object TextQueries {
     * rows, q124 precedent) so the fusion joins plan against LogicalRDDs
     * and no arm's corpus pass is replayed by downstream reuse. */
   private val q190: Q = (s, d) => {
-    graft.functions.VectorOps.register(s)
+    graft.GraftExtensions.install(s)
     import graft.functions.GlobalIndex
     // Round 16: the lexical arm shares q110's tracked token checkpoint;
     // the eager top-20 checkpoint right below materializes the blocks,
@@ -870,7 +870,7 @@ object TextQueries {
     * plan shape, smaller build side) — noted rather than simulated, since
     * the synthetic vocabulary is 31 words. */
   private val q121: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     val docs = Tables.documents(s, d)
       .filter(expr("word_count(text) >= 2"))
     val bg = docs.select(col("doc_id"),
@@ -1149,7 +1149,7 @@ object TextQueries {
     * per-byte rows), map-only until the final sort; the oracle pays the
     * per-character UNNEST the kernel exists to avoid. */
   private val q197: Q = (s, d) => {
-    graft.functions.ByteEntropy.register(s)
+    graft.GraftExtensions.install(s)
     Tables.documents(s, d)
       .filter(col("n_chars") >= 1)
       .select(col("doc_id"), expr("byte_entropy(text)").as("f"))
@@ -1347,7 +1347,7 @@ object TextQueries {
     * joins on the word key; totals ride 1-row broadcast cross-joins;
     * the top-20 is TakeOrderedAndProject, never a global sort. */
   private val q200: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     val uniCounts = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
@@ -1420,7 +1420,7 @@ object TextQueries {
     * handles it), and one (model, eval) hash agg emits ≤|sources|² rows.
     * The corpus is never touched after the two builds. */
   private val q208: Q = (s, d) => {
-    graft.functions.TextKernels.register(s)
+    graft.GraftExtensions.install(s)
     val bgCounts = Tables.documents(s, d)
       .filter(expr("word_count(text) >= 2"))
       .select(col("source"), explode(expr("word_ngrams(text, 2)")).as("bigram"))

@@ -449,7 +449,7 @@ object WarehouseQueries {
     * makes unnecessary at 100 TB.
     */
   private val q182: Q = (s, d) => {
-    graft.functions.KmvSketch.register(s)
+    graft.GraftExtensions.install(s)
     val k = 64
     val two60 = "1152921504606846976"
     val users = Tables.events(s, d).select(col("event_type"), col("user_id"))
@@ -812,7 +812,7 @@ object WarehouseQueries {
   private val q216: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    graft.functions.KllSketch.register(s)
+    graft.GraftExtensions.install(s)
     val ppms = Seq(250000L, 500000L, 750000L, 900000L, 990000L)
     // L-suffixed literals: an int array literal would make p_ppm INT on
     // the Spark side while the oracle emits BIGINT

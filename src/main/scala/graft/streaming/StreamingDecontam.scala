@@ -30,7 +30,7 @@ object StreamingDecontam {
     * shingles shared by more than `maxDf` eval documents (boilerplate). */
   def prepareEval(evalDocs: DataFrame, idCol: String, textCol: String,
       maxDf: Int = 50): DataFrame = {
-    graft.functions.TextKernels.register(evalDocs.sparkSession)
+    graft.GraftExtensions.install(evalDocs.sparkSession)
     val sh = evalDocs
       .filter(size(split(col(textCol), " ")) >= 3)
       .select(col(idCol).as("test_id"),
@@ -56,7 +56,7 @@ object StreamingDecontam {
     * feed whole documents). */
   def flagContaminated(stream: DataFrame, evalShingles: DataFrame,
       idCol: String, textCol: String, minShared: Int = 3): DataFrame = {
-    graft.functions.TextKernels.register(stream.sparkSession)
+    graft.GraftExtensions.install(stream.sparkSession)
     stream
       .filter(size(split(col(textCol), " ")) >= 3)
       .select(col(idCol).as("doc_id"),

@@ -120,8 +120,7 @@ object StreamingNearDup {
   def detect(docs: DataFrame, threshold: Double): Dataset[NearDup] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.MinHashBands.register(spark)
-    graft.functions.TextKernels.register(spark)
+    graft.GraftExtensions.install(spark)
     val banded = docs
       .withColumn("sh", expr("word_shingles(text, 3)"))
       .filter(size(col("sh")) > 0)
@@ -157,8 +156,7 @@ object StreamingNearDup {
     require(ttlMs > 0, "ttl must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.MinHashBands.register(spark)
-    graft.functions.TextKernels.register(spark)
+    graft.GraftExtensions.install(spark)
     val banded = docs
       .withWatermark(tsCol, watermarkDelay)
       .withColumn("sh", expr("word_shingles(text, 3)"))

@@ -53,7 +53,7 @@ class BloomDecontamSpec extends AnyFunSuite {
     // positive; at 3% fpp and 2000 train rows, passing rows must be rare
     val train = (0L until 2000L).map(i => (s"t$i", i)).toDF("shingle", "train_id")
     val eval = (0L until 200L).map(i => (s"e$i", i)).toDF("shingle", "test_id")
-    BloomDecontam.register(spark)
+    GraftExtensions.install(spark)
     val bf = eval.agg(expr("bloom_filter_agg(xxhash64(shingle), 4096L)").as("bf"))
       .head().getAs[Array[Byte]](0)
     val b64 = java.util.Base64.getEncoder.encodeToString(bf)

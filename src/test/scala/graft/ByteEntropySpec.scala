@@ -49,7 +49,7 @@ class ByteEntropySpec extends AnyFunSuite {
   }
 
   test("codegen path through a DataFrame agrees with direct eval") {
-    graft.functions.ByteEntropy.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val rows = Seq("hello world", "aaaa", "baba", "mixed 123 bytes!")
       .toDF("text")

@@ -13,7 +13,7 @@ class CorpusQueriesSpec extends AnyFunSuite {
 
   test("nfc_normalize composes decomposed accents and is idempotent") {
     import spark.implicits._
-    graft.functions.UnicodeKernels.register(spark)
+    GraftExtensions.install(spark)
     val decomposed = "café á plain"   // e + combining acute, a + combining acute
     val composed = "café á plain"
     val r = Seq(decomposed, composed, "ascii only").toDF("t")
@@ -123,7 +123,7 @@ class CorpusQueriesSpec extends AnyFunSuite {
   }
 
   test("q117 novelty counts conserve the global distinct-shingle total") {
-    graft.functions.TextKernels.register(spark)
+    GraftExtensions.install(spark)
     val out = CorpusQueries.queries("q117_shingle_novelty")(spark, dir).cache()
     try {
       val totalDistinct = Tables.documents(spark, dir)

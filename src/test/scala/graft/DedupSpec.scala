@@ -34,8 +34,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhash_bands equals banding the minhash_sig signature (fused == two-step)") {
     import spark.implicits._
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.MinHashBands.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq(
       (1L, Array("a b c", "b c d", "c d e")),
       (2L, Array("x y z", "y z w"))).toDF("id", "sh")
@@ -56,7 +55,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhash_sig is deterministic and shingle-order-independent on sets") {
     import spark.implicits._
-    graft.functions.MinHashSig.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq(
       (1L, Array("a b c", "b c d", "c d e")),
       (2L, Array("c d e", "a b c", "b c d"))).toDF("id", "sh")

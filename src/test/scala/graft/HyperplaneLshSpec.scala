@@ -32,7 +32,7 @@ class HyperplaneLshSpec extends AnyFunSuite {
 
   test("a perturbed copy of a vector usually shares its bucket") {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val e = Tables.embeddings(spark, dir).limit(50)
       .select(col("vec_id"), col("embedding"))
     // tiny perturbation: flip the last component's sign bit-of-noise

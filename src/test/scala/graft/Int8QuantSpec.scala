@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +22,7 @@ class Int8QuantSpec extends AnyFunSuite {
 
   test("int8_err_nanos and absmax_f match the scalar reference on seeded vectors") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(19)
     val vecs = Seq.tabulate(50)(i =>
       (i.toLong, Array.fill(64)((rnd.nextFloat() - 0.5f) * 2f))) :+

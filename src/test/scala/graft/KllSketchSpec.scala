@@ -92,7 +92,7 @@ class KllSketchSpec extends AnyFunSuite {
 
   test("DataFrame path: the q216 band holds under shuffled partitionings") {
     import spark.implicits._
-    graft.functions.KllSketch.register(spark)
+    GraftExtensions.install(spark)
     // deterministic non-uniform stream: quadratic growth + duplicates
     val vals = (0 until 60000).map(i => (i.toLong * i) % 104729L)
     val exact = vals.sorted

@@ -14,7 +14,7 @@ class KmvSketchSpec extends AnyFunSuite {
   private def viaAgg(rows: Seq[(String, Long)], k: Int,
       parts: Int): Map[String, Seq[Long]] = {
     import spark.implicits._
-    graft.functions.KmvSketch.register(spark)
+    GraftExtensions.install(spark)
     rows.toDF("g", "h").repartition(parts)
       .groupBy(col("g")).agg(expr(s"kmv_sketch(h, $k)").as("sk"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap

@@ -13,7 +13,7 @@ class MisraGriesSpec extends AnyFunSuite {
 
   private def candidates(data: Seq[String], k: Int, parts: Int): Set[String] = {
     import spark.implicits._
-    graft.functions.MisraGries.register(spark)
+    GraftExtensions.install(spark)
     data.toDF("w").repartition(parts)
       .agg(expr(s"misra_gries(w, $k)").as("c"))
       .collect()(0).getSeq[String](0).toSet
@@ -37,7 +37,7 @@ class MisraGriesSpec extends AnyFunSuite {
 
   test("two-pass exact composition equals brute force") {
     import spark.implicits._
-    graft.functions.MisraGries.register(spark)
+    GraftExtensions.install(spark)
     val rng = new scala.util.Random(7)
     val data = rng.shuffle(
       (0 until 30).flatMap(i => Seq.fill(1000 / (i + 1))(s"w$i")).toVector)

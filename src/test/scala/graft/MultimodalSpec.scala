@@ -88,7 +88,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("media_for/media_dims expressions equal the Dataset decode path") {
     import spark.implicits._
-    graft.multimodal.MediaKernels.register(spark)
+    GraftExtensions.install(spark)
     val docs = Seq((2L, "even doc png"), (3L, "odd doc jpeg body"), (40L, ""))
       .toDF("doc_id", "text")
     val viaExpr = docs

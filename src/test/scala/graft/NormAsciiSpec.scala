@@ -37,7 +37,7 @@ class NormAsciiSpec extends AnyFunSuite {
     val saved = java.util.Locale.getDefault
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     try {
-      graft.functions.UnicodeKernels.register(spark)
+      GraftExtensions.install(spark)
       val corpus = Tables.documents(spark, "/root/testdata/sf0.001")
         .select(col("text").as("s")).as[String].collect().toSeq
       val rows = (tricky ++ corpus ++ tricky.map(_.toUpperCase)).toDF("s")
@@ -55,7 +55,7 @@ class NormAsciiSpec extends AnyFunSuite {
 
   test("null flows through as null") {
     import spark.implicits._
-    graft.functions.UnicodeKernels.register(spark)
+    GraftExtensions.install(spark)
     val out = Seq(Option.empty[String], Some("Keep Me"))
       .toDF("s").select(expr("norm_ascii(s)")).collect()
     assert(out(0).isNullAt(0) && out(1).getString(0) == "keep me")

@@ -38,7 +38,7 @@ class PqAnnSpec extends AnyFunSuite {
   }
 
   test("ADC top-10 recall vs exact L2 top-10 is >= 0.4 (chance is ~0.02)") {
-    graft.functions.VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val e = Tables.embeddings(spark, dir)
     val (codes, codebook) = PqAnn.build(e, "vec_id", "embedding", m = 16, k = 64, dim = 64)
     val qs = e.filter(col("vec_id") < 5)

@@ -22,7 +22,7 @@ class RollingFingerprintSpec extends AnyFunSuite {
 
   test("codegen rolling hash equals naive window re-hash") {
     import spark.implicits._
-    graft.functions.RollingFingerprint.register(spark)
+    GraftExtensions.install(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "short", "", "exactly sixteen!",
@@ -35,7 +35,7 @@ class RollingFingerprintSpec extends AnyFunSuite {
 
   test("interpreted path agrees with codegen") {
     import spark.implicits._
-    graft.functions.RollingFingerprint.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq("rolling hash interpretation check, long enough to roll").toDF("t")
     val gen = df.select(expr("rolling_fp(t)")).collect().head.getLong(0)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
@@ -48,7 +48,7 @@ class RollingFingerprintSpec extends AnyFunSuite {
 
   test("identical content collides regardless of column context") {
     import spark.implicits._
-    graft.functions.RollingFingerprint.register(spark)
+    GraftExtensions.install(spark)
     val text = "the exact same document body reproduced in two rows"
     val fps = Seq((1L, text), (2L, text),
         (3L, "an entirely different body with no overlap at all"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{SignBitsF, VectorOps}
+import graft.functions.SignBitsF
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +28,7 @@ class SignBitsSpec extends AnyFunSuite {
 
   test("sign_bits_f matches the scalar reference, including bit-63 and short/long vectors") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(41)
     val vecs = Seq.tabulate(40)(i =>
       (i.toLong, Array.fill(64)((rnd.nextFloat() - 0.5f) * 2f))) :+
@@ -62,7 +62,7 @@ class SignBitsSpec extends AnyFunSuite {
 
   test("bit_count(xor) Hamming equals the positional sign-mismatch count (the oracle identity)") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(43)
     val vecs = Seq.tabulate(20)(i => (i.toLong, Array.fill(64)((rnd.nextFloat() - 0.5f) * 2f)))
     val df = vecs.toDF("id", "v")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.SimHash64
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +15,7 @@ class SimHash64Spec extends AnyFunSuite {
       |  THEN 1L ELSE 0L END, b))""".stripMargin
 
   test("kernel == declarative formulation on the sf0.001 corpus") {
-    SimHash64.register(spark)
+    GraftExtensions.install(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .withColumn("ws", array_distinct(split(col("text"), " ")))
     val both = docs
@@ -30,7 +29,7 @@ class SimHash64Spec extends AnyFunSuite {
   }
 
   test("null elements are skipped, not hashed as a phantom token") {
-    SimHash64.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq[String]("alpha", "beta")),
@@ -44,7 +43,7 @@ class SimHash64Spec extends AnyFunSuite {
   }
 
   test("empty and single-word arrays are well-defined") {
-    SimHash64.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val df = Seq(Seq.empty[String], Seq("alpha"), Seq("alpha", "beta"))
       .toDF("ws").withColumn("sig", expr("simhash64(ws)"))

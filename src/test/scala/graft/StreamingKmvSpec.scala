@@ -17,7 +17,7 @@ class StreamingKmvSpec extends AnyFunSuite {
   /** Batch reference: the kmv_sketch aggregate over all rows. */
   private def batchSketch(rows: Seq[(String, Long)]): Map[String, Seq[Long]] = {
     import spark.implicits._
-    graft.functions.KmvSketch.register(spark)
+    GraftExtensions.install(spark)
     rows.toDF("g", "h").groupBy(col("g"))
       .agg(expr(s"kmv_sketch(h, $k)").as("sk"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap

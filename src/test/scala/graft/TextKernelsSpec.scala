@@ -11,7 +11,7 @@ class TextKernelsSpec extends AnyFunSuite {
 
   test("word_shingles == array_distinct(transform(...)) on real and edge-case docs") {
     import spark.implicits._
-    graft.functions.TextKernels.register(spark)
+    GraftExtensions.install(spark)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog the quick brown fox",
       "a b c",
@@ -37,7 +37,7 @@ class TextKernelsSpec extends AnyFunSuite {
 
   test("word_segments == transform(slice(...)) spans incl. empty/short/ragged docs") {
     import spark.implicits._
-    graft.functions.TextKernels.register(spark)
+    GraftExtensions.install(spark)
     // q112's old declarative span builder, restated verbatim as the truth:
     // non-overlapping 3-word slices joined by ' ', last one possibly short,
     // empty text -> one empty segment (split(' ') keeps the empty token).
@@ -71,7 +71,7 @@ class TextKernelsSpec extends AnyFunSuite {
     // spaces, width-1 grams (whole-word identity), interleaved duplicates
     // (hash-slot dedup order), and leading/trailing/double spaces.
     import spark.implicits._
-    graft.functions.TextKernels.register(spark)
+    GraftExtensions.install(spark)
     val docs = Seq(
       "héllo wörld héllo wörld naïve",     // 2-byte code points
       "日本 語 テスト 日本 語",                // 3-byte code points, dup shingle
@@ -104,7 +104,7 @@ class TextKernelsSpec extends AnyFunSuite {
 
   test("word_count == size(split(text, ' ')) on non-null text") {
     import spark.implicits._
-    graft.functions.TextKernels.register(spark)
+    GraftExtensions.install(spark)
     val docs = Seq("", " ", "  ", "one", "one two", "a b c a b c",
       "héllo wörld", " lead", "trail ", "x  y z  w").toDF("text")
     val rows = docs.select(expr("word_count(text)").as("k"),
@@ -114,7 +114,7 @@ class TextKernelsSpec extends AnyFunSuite {
 
   test("word_ngrams == transform(...) bigrams with duplicates kept") {
     import spark.implicits._
-    graft.functions.TextKernels.register(spark)
+    GraftExtensions.install(spark)
     val docs = Seq(
       "a b a b a",
       "two words",

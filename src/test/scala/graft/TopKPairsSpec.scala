@@ -14,7 +14,7 @@ class TopKPairsSpec extends AnyFunSuite {
   private def viaAgg(rows: Seq[(String, Long, Long)], k: Int,
       parts: Int): Seq[(String, Long, Long, Long)] = {
     import spark.implicits._
-    graft.functions.TopKPairs.register(spark)
+    GraftExtensions.install(spark)
     rows.toDF("g", "v", "id").repartition(parts)
       .groupBy(col("g")).agg(expr(s"topk_pair(v, id, $k)").as("top"))
       .select(col("g"), posexplode(col("top")))
@@ -57,7 +57,7 @@ class TopKPairsSpec extends AnyFunSuite {
 
   test("null values and ids are skipped, not kept") {
     import spark.implicits._
-    graft.functions.TopKPairs.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq((Some(9L), Some(1L)), (None, Some(2L)), (Some(99L), None))
       .toDF("v", "id")
     val top = df.agg(expr("topk_pair(v, id, 3)").as("t"))

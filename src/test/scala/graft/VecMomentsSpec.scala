@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VecMoments
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +13,7 @@ class VecMomentsSpec extends AnyFunSuite {
 
   test("vec_moments equals the brute-force count/sum/gram") {
     import spark.implicits._
-    VecMoments.register(spark)
+    GraftExtensions.install(spark)
     val vecs = Seq(
       Array(3L, -2L, 7L), Array(0L, 5L, -1L), Array(4L, 4L, 4L),
       Array(-6L, 1L, 2L), Array(9L, 0L, -3L))
@@ -31,7 +30,7 @@ class VecMomentsSpec extends AnyFunSuite {
 
   test("vec_moments is partitioning-invariant (merge path == update path)") {
     import spark.implicits._
-    VecMoments.register(spark)
+    GraftExtensions.install(spark)
     val vecs = (1 to 200).map(i => Array(i.toLong, (i % 7) - 3L, -i.toLong))
     val one = vecs.toDF("v").coalesce(1).agg(expr("vec_moments(v)")).head.getSeq[Long](0)
     val many = vecs.toDF("v").repartition(16).agg(expr("vec_moments(v)")).head.getSeq[Long](0)
@@ -40,7 +39,7 @@ class VecMomentsSpec extends AnyFunSuite {
 
   test("vec_moments rejects ragged input loudly and skips nulls") {
     import spark.implicits._
-    VecMoments.register(spark)
+    GraftExtensions.install(spark)
     val ragged = Seq(Array(1L, 2L), Array(1L, 2L, 3L)).toDF("v").coalesce(1)
     val ex = intercept[Exception](ragged.agg(expr("vec_moments(v)")).collect())
     def msgs(t: Throwable): Seq[String] =

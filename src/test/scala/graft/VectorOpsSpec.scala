@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GlobalIndex, VectorOps}
+import graft.functions.GlobalIndex
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,7 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("dot_f matches a plain Scala dot product (codegen + interpreted agree)") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val a = Array(1.0f, 2.0f, 3.0f)
     val b = Array(0.5f, -1.0f, 2.0f)
     val expected = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
@@ -28,7 +28,7 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("l2norm_f and cosine identity: cos(v, v) == 1 for non-zero v") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val v = Array.tabulate(64)(i => (i + 1) / 64.0f)
     val df = Seq((v, v)).toDF("x", "y")
     val cos = df.select(expr("dot_f(x, y) / (l2norm_f(x) * l2norm_f(y))"))
@@ -38,14 +38,14 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("dot_f null propagation") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq((Some(Array(1.0f)), Option.empty[Array[Float]])).toDF("x", "y")
     assert(df.select(expr("dot_f(x, y)")).collect().head.isNullAt(0))
   }
 
   test("multiple dot_f calls in one projection compile (freshName scoping)") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val v = Array(1.0f, 2.0f)
     val df = Seq((v, v)).toDF("x", "y")
     val row = df.select(
@@ -59,7 +59,7 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("dot_l matches a BigInt reference and never overflows at kernel bounds") {
     import spark.implicits._
-    VectorOps.register(spark)
+    GraftExtensions.install(spark)
     val rng = new scala.util.Random(21)
     // components at the x1e4-quantized unit-norm bound (|v| <= 10000)
     val rows = (0 until 50).map { _ =>

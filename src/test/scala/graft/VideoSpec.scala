@@ -80,7 +80,7 @@ class VideoSpec extends AnyFunSuite {
   test("the q159 expression pipeline equals the kernel on a local frame") {
     val spark = TestSpark.spark
     import spark.implicits._
-    graft.multimodal.VideoKernels.register(spark)
+    GraftExtensions.install(spark)
     val rows = Seq((7L, 300L), (8L, 0L), (9L, 7000L)).toDF("doc_id", "n_chars")
       .selectExpr("doc_id", "avi_index(avi_for(doc_id, n_chars)) AS f")
       .selectExpr("doc_id", "f.n_frames", "f.width", "f.height",

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.WeightedAvg
 import graft.queries.WeightedAvgAgg
 import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.functions._
@@ -21,7 +20,7 @@ class WeightedAvgSpec extends AnyFunSuite {
 
   test("DeclarativeAggregate matches the Aggregator demo bit-for-bit") {
     import spark.implicits._
-    WeightedAvg.register(spark)
+    GraftExtensions.install(spark)
     val df = rows.toDF("g", "cents", "k")
 
     val fast = df.groupBy("g")
@@ -43,7 +42,7 @@ class WeightedAvgSpec extends AnyFunSuite {
 
   test("partials merge exactly regardless of partitioning") {
     import spark.implicits._
-    WeightedAvg.register(spark)
+    GraftExtensions.install(spark)
     val big = (1 to 10000).map(i => ("g" + (i % 7), (i * 13 % 1000).toLong, (i % 5).toLong))
     val one = big.toDF("g", "cents", "k").repartition(1)
       .groupBy("g").agg(expr("weighted_avg_cents(cents, k)").as("w")).orderBy("g").collect()
@@ -54,7 +53,7 @@ class WeightedAvgSpec extends AnyFunSuite {
 
   test("rides whole-stage codegen (no encoder boundary in the plan)") {
     import spark.implicits._
-    WeightedAvg.register(spark)
+    GraftExtensions.install(spark)
     val df = rows.toDF("g", "cents", "k")
       .groupBy("g").agg(expr("weighted_avg_cents(cents, k)").as("w"))
     val plan = df.queryExecution.executedPlan.toString
